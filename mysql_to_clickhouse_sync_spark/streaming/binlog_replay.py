@@ -132,8 +132,13 @@ def s_binlog_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             if os.path.isdir(d)
             else []
         )
+        if len(parts) > 1:
+            # A retried task can leave a second part file; rotating only
+            # the first would drop the other's rows.
+            raise RuntimeError(
+                f"slice {i} has {len(parts)} part files in {d}: {sorted(parts)}"
+            )
         if parts:
-            assert len(parts) == 1, parts
             os.rename(os.path.join(d, parts[0]), dest)
         else:  # empty slice: still rotate a file so the offset advances
             open(dest, "w").close()

@@ -47,8 +47,13 @@ def stage_batch_files(batches: list[DataFrame], workdir: str) -> list[str]:
             if os.path.isdir(d)
             else []
         )
+        if len(parts) > 1:
+            # A retried task can leave a second part file; staging only the
+            # first would drop the other's rows.
+            raise RuntimeError(
+                f"slice {i} staged {len(parts)} part files in {d}: {sorted(parts)}"
+            )
         if parts:
-            assert len(parts) == 1, parts
             paths.append(os.path.join(d, parts[0]))
         else:
             # Empty slice: write a schema-bearing empty file the stream can

@@ -16,9 +16,22 @@ a JSON manifest recording per-table bounds + row counts — the analog of
 metadata.txt's binlog position, from which the streaming CDC phase
 (streaming/cdc.py) resumes.
 
+Tables sync concurrently, as in the reference's table-level pool
+(``max_workers``, default 10; S:192-199, S:237): a driver-side thread pool
+of min(max_workers, #tables) threads dispatches one table each on the one
+shared session, so each table's driver-side planning and scheduling
+(bounds aggregate, range sample, shuffle, write) overlaps the other
+tables' jobs. The sync is driver-bound, not executor-bound: on a 10-table
+sf0.001 source on 4 cores, a sequential snapshot spent 1.9 s of 3.7 s with
+only the driver busy; ten workers brought it to 1.7 s. ``max_workers=1``
+runs the same pool one table at a time. Each table's jobs keep the
+caller's job group and local properties.
+
 Error policy deliberately diverges from the reference: it logs-and-continues,
 returning [] on failed reads (S:48-50 — silent data loss). Here a failed
-table fails the job; Spark's task retry handles transient faults.
+table fails the job: the first table to fail raises, tables not yet
+started are cancelled, and no manifest is written. Spark's task retry
+handles transient faults.
 """
 
 from __future__ import annotations
@@ -28,7 +41,10 @@ import json
 import math
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor, as_completed
+from typing import Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,6 +52,7 @@ from mysql_to_clickhouse_sync_spark.catalog import ROWID, TABLES, load_table
 from mysql_to_clickhouse_sync_spark.sources.jdbc import filter_tables
 
 DEFAULT_BATCH_SIZE = 1000  # reference --batch_size default (S:236)
+DEFAULT_MAX_WORKERS = 10  # reference --max_workers default (S:237)
 MAX_OUTPUT_PARTITIONS = 64
 
 
@@ -56,6 +73,35 @@ def _load_any(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name in TABLES:
         return load_table(spark, sf_dir, name)
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def _per_table(
+    spark: SparkSession, fn: Callable, items: list, max_workers: int
+) -> list:
+    """``[fn(x) for x in items]`` on a pool of min(max_workers, len(items))
+    driver threads; results come back in ``items`` order. The first call
+    to fail raises, after the calls not yet started are cancelled and the
+    running ones have finished.
+
+    Each call is wrapped by its own ``inheritable_thread_target``, so it
+    runs under a private copy of the caller's local properties (job group,
+    scheduler pool, tags). A copy shared by all calls would be mutated by
+    their concurrent SQL executions (``spark.sql.execution.id``)."""
+    if max_workers < 1:
+        raise ValueError(f"max_workers must be >= 1, got {max_workers}")
+    pool = ThreadPoolExecutor(
+        max_workers=min(max_workers, max(1, len(items))),
+        thread_name_prefix="sync-table",
+    )
+    try:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(fn), x) for x in items
+        ]
+        for done in as_completed(futures):
+            done.result()
+        return [f.result() for f in futures]
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)
 
 
 def discover_tables(sf_dir: str) -> list[str]:
@@ -154,9 +200,11 @@ def snapshot_sync(
     batch_size: int = DEFAULT_BATCH_SIZE,
     binlog_dir: str | None = None,
     lake: bool = False,
+    max_workers: int = DEFAULT_MAX_WORKERS,
 ) -> dict:
     """Full-database sync: discover + filter tables, extract each, write the
-    resume manifest (metadata.txt analog).
+    resume manifest (metadata.txt analog). Up to ``max_workers`` tables
+    sync at once; the manifest lists them in discovery order.
 
     When ``binlog_dir`` is given (the changelog feed the CDC phase will
     tail), the manifest also records its end offset — the full
@@ -178,10 +226,12 @@ def snapshot_sync(
         binlog_offset = current_offset(binlog_dir)
     discovered = discover_tables(sf_dir) or list(TABLES)
     names = filter_tables(discovered, include, exclude)
-    entries = [
-        sync_table(spark, sf_dir, out_dir, name, batch_size, lake=lake)
-        for name in names
-    ]
+    entries = _per_table(
+        spark,
+        lambda name: sync_table(spark, sf_dir, out_dir, name, batch_size, lake=lake),
+        names,
+        max_workers,
+    )
     manifest = {
         # The reference stores the binlog position captured under the
         # snapshot lock (S:175-181), BEFORE the copy starts.
@@ -198,68 +248,67 @@ def snapshot_sync(
     return manifest
 
 
+def _resume_table(
+    spark: SparkSession, sf_dir: str, out_dir: str, entry: dict, batch_size: int
+) -> dict:
+    """One manifest entry's resume: append the rows beyond its max_id and
+    return the advanced entry."""
+    name, rowid, last_max = entry["table"], entry["rowid"], entry["max_id"]
+    if entry.get("mode", "keyset") == "offset" or rowid is None:
+        # PK-less table: no key to resume by (the reference's offset-
+        # paged tables have the same property) — full re-extract.
+        return sync_table(spark, sf_dir, out_dir, name, batch_size)
+    df = _load_any(spark, sf_dir, name)
+    delta = df.filter(F.col(rowid) > last_max)
+    _, mx, n = table_bounds(delta, rowid)
+    if n == 0:
+        return {**entry, "last_delta_rows": 0}
+    n_chunks = max(1, min(MAX_OUTPUT_PARTITIONS, math.ceil(n / batch_size)))
+    chunked = delta.repartitionByRange(n_chunks, F.col(rowid))
+    if "lake_version" in entry:
+        from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable
+        from mysql_to_clickhouse_sync_spark.streaming.cdc import as_state
+
+        table = LakeTable(spark, entry["path"], keys=[rowid], version_cols=[rowid])
+        table.merge(as_state(chunked))
+        entry = {**entry, "lake_version": table.current_version()}
+    else:
+        chunked.write.mode("append").parquet(entry["path"])
+    return {
+        **entry,
+        "max_id": mx,
+        "rows": entry["rows"] + n,
+        "last_delta_rows": n,
+    }
+
+
 def incremental_sync(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str,
     batch_size: int = DEFAULT_BATCH_SIZE,
+    max_workers: int = DEFAULT_MAX_WORKERS,
 ) -> dict:
     """Resume from the manifest: extract only rows whose key is beyond each
     table's recorded max_id (the append-only half of CDC — the reference's
     binlog replay covers updates/deletes; see streaming/cdc.py for those).
 
-    Reads out_dir/manifest.json, appends the delta per table, and rewrites
-    the manifest with advanced bounds. Tables without new rows are skipped
-    entirely (the predicate prunes at the scan, so a no-op sync reads only
-    footers + the bounds aggregate).
+    Reads out_dir/manifest.json, appends the delta per table (up to
+    ``max_workers`` tables at once), and rewrites the manifest with
+    advanced bounds. Tables without new rows are skipped entirely (the
+    predicate prunes at the scan, so a no-op sync reads only footers + the
+    bounds aggregate). If a table fails, the manifest is left as it was.
     """
     manifest_path = os.path.join(out_dir, "manifest.json")
     with open(manifest_path) as fh:
         manifest = json.load(fh)
 
-    new_entries = []
-    for entry in manifest["tables"]:
-        name, rowid, last_max = entry["table"], entry["rowid"], entry["max_id"]
-        if entry.get("mode", "keyset") == "offset" or rowid is None:
-            # PK-less table: no key to resume by (the reference's offset-
-            # paged tables have the same property) — full re-extract.
-            new_entries.append(
-                sync_table(spark, sf_dir, out_dir, name, batch_size)
-            )
-            continue
-        df = _load_any(spark, sf_dir, name)
-        delta = df.filter(F.col(rowid) > last_max)
-        mn, mx, n = table_bounds(delta, rowid)
-        if n > 0:
-            n_chunks = max(
-                1, min(MAX_OUTPUT_PARTITIONS, math.ceil(n / batch_size))
-            )
-            chunked = delta.repartitionByRange(n_chunks, F.col(rowid))
-            if "lake_version" in entry:
-                from mysql_to_clickhouse_sync_spark.sinks.merge import (
-                    LakeTable,
-                )
-                from mysql_to_clickhouse_sync_spark.streaming.cdc import (
-                    as_state,
-                )
-
-                table = LakeTable(
-                    spark, entry["path"], keys=[rowid], version_cols=[rowid]
-                )
-                table.merge(as_state(chunked))
-                entry = {**entry, "lake_version": table.current_version()}
-            else:
-                chunked.write.mode("append").parquet(entry["path"])
-            entry = {
-                **entry,
-                "max_id": mx,
-                "rows": entry["rows"] + n,
-                "last_delta_rows": n,
-            }
-        else:
-            entry = {**entry, "last_delta_rows": 0}
-        new_entries.append(entry)
-
+    new_entries = _per_table(
+        spark,
+        lambda entry: _resume_table(spark, sf_dir, out_dir, entry, batch_size),
+        manifest["tables"],
+        max_workers,
+    )
     manifest = {
         **manifest,
         "completed_unix": int(time.time()),
@@ -285,6 +334,13 @@ def main() -> None:
         help="land keyset tables as versioned LakeTables (time travel,"
         " MERGE-committed incremental resume)",
     )
+    ap.add_argument(
+        "--max-workers",
+        type=int,
+        default=DEFAULT_MAX_WORKERS,
+        help="tables synced at once on the one Spark session (default:"
+        " %(default)s; 1 syncs them one after another)",
+    )
     args = ap.parse_args()
     spark = get_spark("snapshot_sync")
     manifest = snapshot_sync(
@@ -295,6 +351,7 @@ def main() -> None:
         args.exclude,
         args.batch_size,
         lake=args.lake,
+        max_workers=args.max_workers,
     )
     print(json.dumps({t["table"]: t["rows"] for t in manifest["tables"]}))
 

@@ -158,3 +158,86 @@ def test_lake_mode_sync_is_versioned_and_time_travels(spark, tmp_path):
     # current version holds both halves; version 0 is the pure snapshot
     assert table.read().count() == 2 * n0
     assert table.read(version=0).count() == n0
+
+
+def _copy_source(dst, names):
+    import os
+    import shutil
+
+    os.makedirs(dst)
+    for n in names:
+        shutil.copy(f"{SF_DIR}/{n}.parquet", f"{dst}/{n}.parquet")
+    return str(dst)
+
+
+def test_concurrent_tables_keep_the_callers_job_group(spark, tmp_path):
+    """The table-level pool runs each table's jobs on a worker thread; they
+    must still carry the caller's job group (cancelJobGroup and per-group
+    accounting depend on it)."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = [sc.getLocalProperty(k) for k in keys]
+    group = "test-sync-pool-group"
+    sc.setJobGroup(group, "snapshot_sync under a job group")
+    try:
+        manifest = snapshot_sync(
+            spark, SF_DIR, str(tmp_path / "out"), include="^(region|nation|orders)$"
+        )
+    finally:
+        for k, v in zip(keys, saved):
+            sc.setLocalProperty(k, v)
+    assert len(manifest["tables"]) == 3
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 3
+
+
+def test_manifest_order_independent_of_max_workers(spark, tmp_path):
+    """The manifest lists tables in filtered discovery order whatever the
+    pool width, and a one-worker pool produces the same entries."""
+    from mysql_to_clickhouse_sync_spark.sync import discover_tables
+
+    out = str(tmp_path / "out")
+    exclude = "^(documents|embeddings)$"
+    want = filter_tables(discover_tables(SF_DIR), None, exclude)
+    entries = {}
+    for workers in (10, 1):
+        m = snapshot_sync(spark, SF_DIR, out, exclude=exclude, max_workers=workers)
+        assert [t["table"] for t in m["tables"]] == want
+        with open(f"{out}/manifest.json") as fh:
+            on_disk = json.load(fh)
+        assert on_disk["tables"] == m["tables"]
+        entries[workers] = m["tables"]
+    assert entries[10] == entries[1]
+
+
+def test_failed_table_fails_the_sync_and_writes_no_manifest(spark, tmp_path):
+    """A failed table fails the job under concurrency too: snapshot_sync
+    raises and writes no manifest; incremental_sync raises and leaves the
+    existing manifest as it was."""
+    import os
+
+    import pytest
+
+    from mysql_to_clickhouse_sync_spark.sync import incremental_sync
+
+    not_parquet = b"this is not a parquet file\n" * 64
+    tables = ["region", "nation", "orders"]
+    bad = _copy_source(tmp_path / "bad_src", tables)
+    with open(f"{bad}/bad.parquet", "wb") as fh:
+        fh.write(not_parquet)
+    out_bad = str(tmp_path / "out_bad")
+    with pytest.raises(Exception):
+        snapshot_sync(spark, bad, out_bad)
+    assert not os.path.exists(f"{out_bad}/manifest.json")
+
+    src = _copy_source(tmp_path / "src", tables)
+    out = str(tmp_path / "out")
+    snapshot_sync(spark, src, out)
+    with open(f"{out}/manifest.json", "rb") as fh:
+        before = fh.read()
+    os.remove(f"{src}/nation.parquet")  # the copy is read-only
+    with open(f"{src}/nation.parquet", "wb") as fh:
+        fh.write(not_parquet)
+    with pytest.raises(Exception):
+        incremental_sync(spark, src, out)
+    with open(f"{out}/manifest.json", "rb") as fh:
+        assert fh.read() == before

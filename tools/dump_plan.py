@@ -5,9 +5,10 @@ Usage: python tools/dump_plan.py [--sf DIR] [--out FILE] name
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mysql_to_clickhouse_sync_spark.registry import queries
 from mysql_to_clickhouse_sync_spark.session import get_spark

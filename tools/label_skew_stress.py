@@ -29,11 +29,12 @@ from __future__ import annotations
 
 import argparse
 import math
+import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql.types import (
     ArrayType,

@@ -15,10 +15,12 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:
@@ -41,7 +43,7 @@ def main() -> int:
     # driver would, from a neutral process.
     cmd = [
         sys.executable,
-        "/root/repo/tools/verify_local.py",
+        os.path.join(ROOT, "tools", "verify_local.py"),
         "--sf",
         args.out,
         "--canon",

@@ -21,7 +21,7 @@ from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mysql_to_clickhouse_sync_spark.catalog import TABLES
 from mysql_to_clickhouse_sync_spark.registry import REGISTRY, queries
