@@ -89,7 +89,3 @@ EVENTS_US_CTE = """
         FROM events
     )
 """
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}

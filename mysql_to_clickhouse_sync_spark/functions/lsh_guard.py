@@ -1,12 +1,16 @@
-"""Degenerate-bucket guard for LSH candidate generation.
+"""Banded candidate generation and its degenerate-bucket guard.
 
-Every banded near-dup path (MinHash bands, sign-LSH bands, SimHash
-pigeonhole chunks) generates candidates through a bucket self-join, whose
-cost is sum over buckets of n_b^2. At 100 TB one degenerate bucket —
-empty-text shingles, all-zero vectors, a boilerplate header shared by
-millions of docs — turns that term quadratic while every healthy bucket
-stays tiny. The guard caps bucket size BEFORE the self-join: rows in
-buckets above the cap are excluded from candidate generation and the
+Every banded near-dup path (MinHash bands, sign-LSH bands, SimHash and
+dHash pigeonhole chunks) generates candidates through a bucket self-join,
+whose cost is sum over buckets of n_b^2. `band_pairs` is that self-join,
+the only one in the package: each family builds a band table (one row per
+(id, cell)) and re-scores the distinct pairs it returns.
+
+At 100 TB one degenerate bucket — empty-text shingles, all-zero vectors, a
+boilerplate header shared by millions of docs — turns that term quadratic
+while every healthy bucket stays tiny. The guard (`cap_buckets`, or
+`band_pairs(max_bucket=...)`) caps bucket size BEFORE the self-join: rows
+in buckets above the cap are excluded from candidate generation and the
 dropped buckets are returned as an audit table (bucket key + size), so the
 pipeline degrades explicitly (documented recall loss on pathological keys)
 instead of melting.
@@ -35,6 +39,20 @@ from pyspark.sql import functions as F
 DEFAULT_MAX_BUCKET = 500
 
 
+def pigeonhole_bounds(bits: int, chunks: int) -> list[tuple[int, int]]:
+    """(start_bit, width) of each of `chunks` disjoint chunks covering a
+    `bits`-bit fingerprint, widths as even as possible (7,7,6,6,6 for
+    32/5). Two fingerprints within hamming distance chunks - 1 agree on at
+    least one whole chunk, so chunk cells give exact recall."""
+    base, extra = divmod(bits, chunks)
+    bounds, start = [], 0
+    for i in range(chunks):
+        width = base + (1 if i < extra else 0)
+        bounds.append((start, width))
+        start += width
+    return bounds
+
+
 def cap_buckets(
     bands: DataFrame,
     key_cols: Sequence[str],
@@ -51,3 +69,34 @@ def cap_buckets(
         F.broadcast(big.select(*key_cols)), list(key_cols), "left_anti"
     )
     return kept, big
+
+
+def band_pairs(
+    bands: DataFrame,
+    id_col: str,
+    cell_cols: Sequence[str],
+    max_bucket: int | None = None,
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """Distinct candidate pairs (*carry, id_a, id_b), id_a < id_b, from a
+    band table: every pair of ids sharing at least one cell, once.
+
+    With max_bucket, cells above the cap are dropped first (cap_buckets).
+    `carry` names cell columns to keep on each pair (e.g. `label`); they
+    must be constant per pair, like a partition key that is part of every
+    cell."""
+    if max_bucket is not None:
+        bands, _ = cap_buckets(bands, cell_cols, max_bucket)
+    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    for c in cell_cols:
+        cond &= F.col(f"a.{c}") == F.col(f"b.{c}")
+    return (
+        bands.alias("a")
+        .join(bands.alias("b"), cond)
+        .select(
+            *[F.col(f"a.{c}") for c in carry],
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+        )
+        .distinct()
+    )

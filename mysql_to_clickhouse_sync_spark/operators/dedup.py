@@ -38,6 +38,9 @@ from pyspark.sql.window import Window
 from mysql_to_clickhouse_sync_spark.catalog import EVENTS_US_CTE, load_table
 from mysql_to_clickhouse_sync_spark.functions.lsh_guard import (
     DEFAULT_MAX_BUCKET,
+    band_pairs,
+    cap_buckets,
+    pigeonhole_bounds,
 )
 from mysql_to_clickhouse_sync_spark.registry import declare
 
@@ -55,20 +58,9 @@ SIMHASH_MAX_HAMMING = 4
 # hash-matches.
 SIMHASH_CHUNKS = SIMHASH_MAX_HAMMING + 1  # 5 chunks: bit widths 7,7,6,6,6
 SIMHASH_EXACT_SUBSET = 300  # doc_id bound for the all-pairs ground-truth twin
-
-
-def _simhash_chunk_bounds(
-    bits: int = SIMHASH_BITS, chunks: int = SIMHASH_CHUNKS
-) -> list[tuple[int, int]]:
-    """(start_bit, width) for each pigeonhole chunk, widths as even as
-    possible (7,7,6,6,6 for 32/5)."""
-    base, extra = divmod(bits, chunks)
-    bounds, start = [], 0
-    for i in range(chunks):
-        width = base + (1 if i < extra else 0)
-        bounds.append((start, width))
-        start += width
-    return bounds
+# Cell keys of each family's band table (band_pairs / cap_buckets).
+MINHASH_CELL = ("band_idx", "bucket")
+SIMHASH_CELL = ("lang", "chunk_idx", "chunk_val")
 
 
 @declare(
@@ -217,20 +209,6 @@ MINHASH_B = (1013904223, 1664525, 69069, 362437,
              1103515245, 12345, 214013, 2531011)
 
 
-def minhash_signature(shingles: Column, num_hashes: int = NUM_HASHES) -> Column:
-    """MinHash signature as a single HOF expression (kept for API use on
-    small arrays; the LSH pipeline uses the faster explode+groupBy path)."""
-    base = lambda s: md5_hash64(s) % MINHASH_P  # noqa: E731
-
-    def min_hash(j: int) -> Column:
-        a, b = MINHASH_A[j], MINHASH_B[j]
-        return F.array_min(
-            F.transform(shingles, lambda s: (base(s) * a + b) % MINHASH_P)
-        )
-
-    return F.array(*[min_hash(j) for j in range(num_hashes)])
-
-
 def shingle_rows(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -343,36 +321,17 @@ def minhash_lsh_candidates(
     # the agreement join) — cache it so the md5 pass runs once.
     sigs = minhash_signatures_table(docs, id_col, text_col, num_hashes).cache()
     bands = minhash_band_table(sigs, num_hashes, num_bands)
-    if max_bucket is not None:
-        from mysql_to_clickhouse_sync_spark.functions.lsh_guard import cap_buckets
-
-        bands, _ = cap_buckets(bands, ["band_idx", "bucket"], max_bucket)
-    return minhash_pairs_from_bands(bands, sigs, num_hashes)
+    cand = band_pairs(bands, "doc_id", MINHASH_CELL, max_bucket)
+    return minhash_rescore(cand, sigs, num_hashes)
 
 
-def minhash_pairs_from_bands(
-    bands: DataFrame, sigs: DataFrame, num_hashes: int = NUM_HASHES
+def minhash_rescore(
+    cand: DataFrame, sigs: DataFrame, num_hashes: int = NUM_HASHES
 ) -> DataFrame:
-    """The back half of MinHash-LSH candidate generation: bucket
-    self-join over an (already guarded) band table -> distinct pairs ->
-    signature-agreement Jaccard estimate. Split out (round 10) so a
-    caller that ALSO needs the band table for bucket auditing
-    (q_neardup_pipeline) computes bands and the bucket-size groupBy
-    once instead of once per consumer."""
-    left = bands.alias("a")
-    right = bands.alias("b")
-    cand = (
-        left.join(
-            right,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
+    """(doc_a, doc_b, est_jaccard) for band_pairs candidates: the share of
+    signature positions on which the two docs agree."""
+    sa = sigs.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
+    sb = sigs.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))
     agreement = F.aggregate(
         F.zip_with(
             F.col("sig_a"),
@@ -383,11 +342,11 @@ def minhash_pairs_from_bands(
         lambda acc, x: acc + x,
     )
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
         .select(
-            "doc_a",
-            "doc_b",
+            F.col("id_a").alias("doc_a"),
+            F.col("id_b").alias("doc_b"),
             (agreement.cast("double") / F.lit(float(num_hashes))).alias(
                 "est_jaccard"
             ),
@@ -621,60 +580,46 @@ def simhash_banded_pairs(
     tools/lang_skew_stress.py and PLANS.md. The oracle-exact declared
     queries pass max_bucket=None explicitly (the fixture's buckets are all
     tiny, so their uncapped oracles stay the honest contract)."""
-    chunks = max_hamming + 1
+    bands = simhash_band_table(sh, bits, max_hamming + 1)
+    cand = band_pairs(bands, "doc_id", SIMHASH_CELL, max_bucket)
+    return hamming_rescore(cand, sh, max_hamming)
+
+
+def simhash_band_table(
+    sh: DataFrame, bits: int = SIMHASH_BITS, chunks: int = SIMHASH_CHUNKS
+) -> DataFrame:
+    """(doc_id, lang, chunk_idx, chunk_val) pigeonhole banding table from a
+    (doc_id, lang, simhash) frame — the shared front half of candidate
+    generation and bucket auditing (minhash_band_table's role)."""
     chunk_cols = [
         F.shiftright(F.col("simhash"), start).bitwiseAND(
             F.lit((1 << width) - 1)
         )
-        for start, width in _simhash_chunk_bounds(bits, chunks)
+        for start, width in pigeonhole_bounds(bits, chunks)
     ]
-    bands = sh.select(
+    return sh.select(
         "doc_id",
         "lang",
         F.posexplode(F.array(*chunk_cols)).alias("chunk_idx", "chunk_val"),
     )
-    if max_bucket is not None:
-        from mysql_to_clickhouse_sync_spark.functions.lsh_guard import cap_buckets
-
-        bands, _ = cap_buckets(
-            bands, ["lang", "chunk_idx", "chunk_val"], max_bucket
-        )
-    return simhash_pairs_from_bands(bands, sh, max_hamming)
 
 
-def simhash_pairs_from_bands(
-    bands: DataFrame, sh: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING
+def hamming_rescore(
+    cand: DataFrame, sh: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING
 ) -> DataFrame:
-    """The back half of the pigeonhole plan: chunk-cell self-join over an
-    (already guarded) banding table -> distinct pairs -> exact-hamming
-    re-score against the fingerprint table. Split out (round 10) so
-    q_neardup_pipeline shares ONE banding table between candidate
-    generation and the dropped-bucket audit."""
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    sim_a = sh.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a")
-    )
-    sim_b = sh.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b")
-    )
+    """(doc_a, doc_b, hamming) for band_pairs candidates: exact fingerprint
+    hamming distance, kept when <= max_hamming."""
+    sim_a = sh.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("sim_a"))
+    sim_b = sh.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("sim_b"))
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return (
-        cand.join(sim_a, "doc_a")
-        .join(sim_b, "doc_b")
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
+        cand.join(sim_a, "id_a")
+        .join(sim_b, "id_b")
+        .select(
+            F.col("id_a").alias("doc_a"),
+            F.col("id_b").alias("doc_b"),
+            hamming.alias("hamming"),
+        )
         .filter(F.col("hamming") <= max_hamming)
     )
 
@@ -742,11 +687,13 @@ GUARD_CAP = 8
 
 def _simhash_chunks_sql() -> str:
     """UNION ALL of the 5 pigeonhole chunk projections over `sh` — the SQL
-    twin of the posexplode in simhash_banded_pairs."""
+    twin of simhash_band_table."""
     return "\n        UNION ALL\n        ".join(
         f"SELECT doc_id, lang, {i} AS chunk_idx,"
         f" (simhash >> {start}) & {(1 << width) - 1} AS chunk_val FROM sh"
-        for i, (start, width) in enumerate(_simhash_chunk_bounds())
+        for i, (start, width) in enumerate(
+            pigeonhole_bounds(SIMHASH_BITS, SIMHASH_CHUNKS)
+        )
     )
 
 
@@ -812,20 +759,9 @@ def q_lsh_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded bucket with its size — the explicit record of where the guard
     traded recall. At 100 TB this table is what routes degenerate keys to
     exact dedup instead of silently losing them."""
-    from mysql_to_clickhouse_sync_spark.functions.lsh_guard import cap_buckets
-
     docs = load_table(spark, sf_dir, "documents")
     sh = simhash_table(docs, extra_cols=("lang",))
-    chunk_cols = [
-        F.shiftright(F.col("simhash"), start).bitwiseAND(F.lit((1 << width) - 1))
-        for start, width in _simhash_chunk_bounds()
-    ]
-    bands = sh.select(
-        "doc_id",
-        "lang",
-        F.posexplode(F.array(*chunk_cols)).alias("chunk_idx", "chunk_val"),
-    )
-    _, dropped = cap_buckets(bands, ["lang", "chunk_idx", "chunk_val"], GUARD_CAP)
+    _, dropped = cap_buckets(simhash_band_table(sh), SIMHASH_CELL, GUARD_CAP)
     return dropped
 
 
@@ -1899,15 +1835,12 @@ def q_minhash_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash generator. At 100 TB this table is the boilerplate-class
     detector: a bucket the cap drops is (overwhelmingly) one equivalence
     class of near-identical text that exact dedup collapses cheaply."""
-    from mysql_to_clickhouse_sync_spark.functions.lsh_guard import cap_buckets
-
     docs = load_table(spark, sf_dir, "documents")
     sigs = minhash_signatures_table(docs, "doc_id", "text", NUM_HASHES)
-    bands = minhash_band_table(sigs)
     _, dropped = cap_buckets(
-        bands, ["band_idx", "bucket"], MINHASH_AUDIT_CAP
+        minhash_band_table(sigs), MINHASH_CELL, MINHASH_AUDIT_CAP
     )
-    return dropped.select("band_idx", "bucket", F.col("bucket_n"))
+    return dropped
 
 
 def _consensus_oracle() -> str:

@@ -38,6 +38,7 @@ per subspace is exactly ``q_kmeans`` restricted to a dim slice.
 
 from __future__ import annotations
 
+import math
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -172,9 +173,16 @@ def _local_cents(spark: SparkSession, rows: list[tuple[int, list[float]]]):
     folded to InternalRows at ANALYSIS time, so the relation is pure data —
     downstream plan/codegen text is identical every Lloyd iteration and no
     Python worker or checkpoint job is ever involved. Double literals use
-    repr(), the shortest round-tripping form, so the values are exact."""
+    repr(), the shortest round-tripping form, so the values are exact; a
+    non-finite value has no literal form and raises here, naming its cid."""
     if not rows:
         return spark.createDataFrame([], _CENT_SCHEMA)
+    for cid, vec in rows:
+        bad = [v for v in vec if not math.isfinite(v)]
+        if bad:
+            raise ValueError(
+                f"centroid cid={cid} has non-finite components {bad[:3]}"
+            )
     vals = ", ".join(
         "({}, array({}))".format(
             int(cid), ", ".join(f"{v!r}D" for v in vec)

@@ -54,6 +54,10 @@ from pyspark.sql.types import (
 )
 
 from mysql_to_clickhouse_sync_spark.catalog import load_table
+from mysql_to_clickhouse_sync_spark.functions.lsh_guard import (
+    band_pairs,
+    pigeonhole_bounds,
+)
 from mysql_to_clickhouse_sync_spark.registry import declare
 
 if TYPE_CHECKING:
@@ -1928,42 +1932,26 @@ def q_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = docs.mapInPandas(hash_batches, schema=hashed_schema).cache()
 
     # pigeonhole banding: DHASH_MAX_HAMMING + 1 disjoint chunks
-    chunks = DHASH_MAX_HAMMING + 1
-    base, extra = divmod(DHASH_BITS, chunks)
-    bounds, start = [], 0
-    for i in range(chunks):
-        width = base + (1 if i < extra else 0)
-        bounds.append((start, width))
-        start += width
     chunk_cols = [
         F.shiftright(F.col("dhash"), s).bitwiseAND(F.lit((1 << w) - 1))
-        for s, w in bounds
+        for s, w in pigeonhole_bounds(DHASH_BITS, DHASH_MAX_HAMMING + 1)
     ]
     bands = hashed.select(
         "media_id",
         F.posexplode(F.array(*chunk_cols)).alias("chunk_idx", "chunk_val"),
     )
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("media_a"),
-            F.col("b.media_id").alias("media_b"),
-        )
-        .distinct()
-    )
-    ha = hashed.select(F.col("media_id").alias("media_a"), F.col("dhash").alias("h_a"))
-    hb = hashed.select(F.col("media_id").alias("media_b"), F.col("dhash").alias("h_b"))
+    cand = band_pairs(bands, "media_id", ["chunk_idx", "chunk_val"])
+    ha = hashed.select(F.col("media_id").alias("id_a"), F.col("dhash").alias("h_a"))
+    hb = hashed.select(F.col("media_id").alias("id_b"), F.col("dhash").alias("h_b"))
     hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
     return (
-        cand.join(ha, "media_a")
-        .join(hb, "media_b")
-        .select("media_a", "media_b", hamming.alias("hamming"))
+        cand.join(ha, "id_a")
+        .join(hb, "id_b")
+        .select(
+            F.col("id_a").alias("media_a"),
+            F.col("id_b").alias("media_b"),
+            hamming.alias("hamming"),
+        )
         .filter(F.col("hamming") <= DHASH_MAX_HAMMING)
     )
 

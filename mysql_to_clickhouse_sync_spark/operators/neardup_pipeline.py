@@ -45,29 +45,33 @@ from pyspark.sql.window import Window
 from mysql_to_clickhouse_sync_spark.catalog import load_table
 from mysql_to_clickhouse_sync_spark.functions.lsh_guard import (
     DEFAULT_MAX_BUCKET,
+    band_pairs,
     cap_buckets,
 )
 from mysql_to_clickhouse_sync_spark.operators.dedup import (
     GUARD_CAP,
     MINHASH_AUDIT_CAP,
+    MINHASH_CELL,
     NUM_HASHES,
+    SIMHASH_CELL,
     SIMHASH_MAX_HAMMING,
     _minhash_cand_cte,
-    _simhash_chunk_bounds,
     _simhash_chunks_sql,
     _simhash_sh_cte,
+    hamming_rescore,
     minhash_band_table,
-    minhash_pairs_from_bands,
+    minhash_rescore,
     minhash_signatures_table,
-    simhash_pairs_from_bands,
+    simhash_band_table,
     simhash_table,
 )
 from mysql_to_clickhouse_sync_spark.operators.similarity import (
     _EMB_BANDS_UNION,
     EMB_AUDIT_CAP,
+    EMB_CELL,
     NEARDUP_THRESHOLD,
+    cosine_rescore,
     embedding_band_table,
-    neardup_pairs_from_bands,
     with_norm,
 )
 from mysql_to_clickhouse_sync_spark.functions.vectors import (
@@ -258,40 +262,23 @@ def neardup_pipeline(
     # Round 10: each family computes its banding table ONCE — candidate
     # generation and the dropped-bucket audit share the same kept/drop
     # split from a single cap_buckets call (one bucket-size groupBy per
-    # family), instead of the pairs helper and the audit each rebuilding
-    # the band table (which doubled the signature/banding work and ran
-    # the sizing groupBy twice per family).
+    # family), and band_pairs self-joins the kept rows uncapped.
     sigs = minhash_signatures_table(reps, "doc_id", "text", NUM_HASHES).cache()
-    mh_bands = minhash_band_table(sigs)
-    mh_kept, mh_drop = cap_buckets(mh_bands, ["band_idx", "bucket"], mh_cap)
-    mh_pairs = minhash_pairs_from_bands(mh_kept, sigs)
+    mh_kept, mh_drop = cap_buckets(minhash_band_table(sigs), MINHASH_CELL, mh_cap)
+    mh_pairs = minhash_rescore(band_pairs(mh_kept, "doc_id", MINHASH_CELL), sigs)
     minhash = stage("minhash", n_reps, mh_pairs, mh_drop)
 
     sh = simhash_table(reps, extra_cols=("lang",)).cache()
-    chunk_cols = [
-        F.shiftright(F.col("simhash"), start).bitwiseAND(
-            F.lit((1 << width) - 1)
-        )
-        for start, width in _simhash_chunk_bounds()
-    ]
-    sh_bands = sh.select(
-        "doc_id",
-        "lang",
-        F.posexplode(F.array(*chunk_cols)).alias("chunk_idx", "chunk_val"),
-    )
-    sh_kept, sh_drop = cap_buckets(
-        sh_bands, ["lang", "chunk_idx", "chunk_val"], sh_cap
-    )
-    sh_pairs = simhash_pairs_from_bands(sh_kept, sh)
+    sh_kept, sh_drop = cap_buckets(simhash_band_table(sh), SIMHASH_CELL, sh_cap)
+    sh_pairs = hamming_rescore(band_pairs(sh_kept, "doc_id", SIMHASH_CELL), sh)
     simhash = stage("simhash", n_reps, sh_pairs, sh_drop)
 
     emb = load_table(spark, sf_dir, "embeddings")
     nz = with_norm(emb).filter(F.col("norm") > 0).cache()
-    e_bands = embedding_band_table(nz)
-    e_kept, e_drop = cap_buckets(
-        e_bands, ["label", "band", "bucket"], emb_cap
+    e_kept, e_drop = cap_buckets(embedding_band_table(nz), EMB_CELL, emb_cap)
+    e_pairs = cosine_rescore(
+        band_pairs(e_kept, "vec_id", EMB_CELL, carry=("label",)), nz
     )
-    e_pairs = neardup_pairs_from_bands(e_kept, nz)
     embedding = stage(
         "embedding", nz.agg(F.count("*").alias("n_in")), e_pairs, e_drop
     )

@@ -41,6 +41,8 @@ from pyspark.sql.window import Window
 from mysql_to_clickhouse_sync_spark.catalog import load_table
 from mysql_to_clickhouse_sync_spark.functions.lsh_guard import (
     DEFAULT_MAX_BUCKET,
+    band_pairs,
+    cap_buckets,
 )
 from mysql_to_clickhouse_sync_spark.registry import declare
 
@@ -168,6 +170,7 @@ def q_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # would use 8-16 bit bands).
 NEARDUP_BANDS = 16
 NEARDUP_BAND_BITS = 4
+EMB_CELL = ("label", "band", "bucket")  # band table cell keys
 
 
 def band_bucket(
@@ -246,64 +249,34 @@ def banded_neardup_pairs(
     finish — vs 13.4k candidates / 9.4 s at cap 500 (PLANS.md round-4
     table). Oracle-exact declared queries opt out with max_bucket=None."""
     emb = with_norm(emb).filter(F.col("norm") > 0)
-    banded = embedding_band_table(emb, n_bands, band_bits)
-    if max_bucket is not None:
-        # degenerate-bucket guard (e.g. all-zero vectors collapsing into one
-        # cell): see functions/lsh_guard — None keeps oracle parity for the
-        # declared query.
-        from mysql_to_clickhouse_sync_spark.functions.lsh_guard import cap_buckets
-
-        banded, _ = cap_buckets(banded, ["label", "band", "bucket"], max_bucket)
-    return neardup_pairs_from_bands(banded, emb, threshold)
+    bands = embedding_band_table(emb, n_bands, band_bits)
+    cand = band_pairs(bands, "vec_id", EMB_CELL, max_bucket, carry=("label",))
+    return cosine_rescore(cand, emb, threshold)
 
 
-def neardup_pairs_from_bands(
-    banded: DataFrame,
-    emb: DataFrame,
-    threshold: float = NEARDUP_THRESHOLD,
+def cosine_rescore(
+    cand: DataFrame, emb: DataFrame, threshold: float = NEARDUP_THRESHOLD
 ) -> DataFrame:
-    """The back half of the sign-LSH plan: cell self-join over an
-    (already guarded) banding table -> distinct pairs -> exact-cosine
-    re-score against the norm-filtered embedding frame. Split out
-    (round 10) so q_neardup_pipeline shares ONE banding table between
-    candidate generation and the dropped-bucket audit."""
-    a = banded.select(
-        F.col("label"), F.col("band"), F.col("bucket"), F.col("vec_id").alias("vec_a")
-    )
-    b = banded.select(
-        F.col("label").alias("label_b"),
-        F.col("band").alias("band_b"),
-        F.col("bucket").alias("bucket_b"),
-        F.col("vec_id").alias("vec_b"),
-    )
-    cand = (
-        a.join(
-            b,
-            (F.col("label") == F.col("label_b"))
-            & (F.col("band") == F.col("band_b"))
-            & (F.col("bucket") == F.col("bucket_b"))
-            & (F.col("vec_a") < F.col("vec_b")),
-        )
-        .select("label", "vec_a", "vec_b")
-        .distinct()
-    )
+    """(label, vec_a, vec_b, cosine) for band_pairs candidates carrying
+    `label`: exact cosine against the norm-filtered embedding frame, kept
+    when >= threshold."""
     normed_a = emb.select(
-        F.col("vec_id").alias("vec_a"),
+        F.col("vec_id").alias("id_a"),
         F.col("embedding").alias("emb_a"),
         F.col("norm").alias("norm_a"),
     )
     normed_b = emb.select(
-        F.col("vec_id").alias("vec_b"),
+        F.col("vec_id").alias("id_b"),
         F.col("embedding").alias("emb_b"),
         F.col("norm").alias("norm_b"),
     )
     return (
-        cand.join(normed_a, "vec_a")
-        .join(normed_b, "vec_b")
+        cand.join(normed_a, "id_a")
+        .join(normed_b, "id_b")
         .select(
             "label",
-            "vec_a",
-            "vec_b",
+            F.col("id_a").alias("vec_a"),
+            F.col("id_b").alias("vec_b"),
             (
                 dot(F.col("emb_a"), F.col("emb_b"))
                 / (F.col("norm_a") * F.col("norm_b"))
@@ -566,14 +539,11 @@ def q_embedding_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     last generator's audit table (simhash: q_lsh_bucket_audit, minhash:
     q_minhash_bucket_audit). Zero-norm vectors are excluded first,
     mirroring banded_neardup_pairs."""
-    from mysql_to_clickhouse_sync_spark.functions.lsh_guard import cap_buckets
-
     emb = with_norm(load_table(spark, sf_dir, "embeddings")).filter(
         F.col("norm") > 0
     )
-    banded = embedding_band_table(emb)
-    _, dropped = cap_buckets(banded, ["label", "band", "bucket"], EMB_AUDIT_CAP)
-    return dropped.select("label", "band", "bucket", "bucket_n")
+    _, dropped = cap_buckets(embedding_band_table(emb), EMB_CELL, EMB_AUDIT_CAP)
+    return dropped
 
 
 # --- Hybrid retrieval: reciprocal rank fusion (BM25 + vector) ---------------

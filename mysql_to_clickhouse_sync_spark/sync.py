@@ -116,6 +116,42 @@ def discover_tables(sf_dir: str) -> list[str]:
     return names
 
 
+def _land(
+    spark: SparkSession,
+    df: DataFrame,
+    rowid: str | None,
+    n: int,
+    batch_size: int,
+    path: str,
+    write_mode: str,
+    lake: bool,
+) -> tuple[int, int | None]:
+    """Chunk-partition ``df`` (``n`` rows) and land it at ``path``: merged
+    into the LakeTable there keyed on ``rowid`` if ``lake``, else written
+    as parquet with ``write_mode``. Returns (chunks, lake version or None).
+
+    Chunk plan -> physical partitioning: ceil(n/batch) ranges on the key
+    (a hash spread without one), capped so a 100 TB table yields a sane
+    task count (each partition then covers a wider stride — same plan,
+    coarser granularity)."""
+    n_chunks = max(1, min(MAX_OUTPUT_PARTITIONS, math.ceil(max(n, 1) / batch_size)))
+    if n == 0:
+        chunked = df
+    elif rowid is not None:
+        chunked = df.repartitionByRange(n_chunks, F.col(rowid))
+    else:
+        chunked = df.repartition(n_chunks)
+    if not lake:
+        chunked.write.mode(write_mode).parquet(path)
+        return n_chunks, None
+    from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable
+    from mysql_to_clickhouse_sync_spark.streaming.cdc import as_state
+
+    table = LakeTable(spark, path, keys=[rowid], version_cols=[rowid])
+    table.merge(as_state(chunked))
+    return n_chunks, table.current_version()
+
+
 def sync_table(
     spark: SparkSession,
     sf_dir: str,
@@ -157,16 +193,10 @@ def sync_table(
         mn, mx, n = 0, 0, df.count()  # the reference's (0,0) sentinel
         mode = "offset"
 
-    # Chunk plan -> physical partitioning: ceil(n/batch) ranges on the key,
-    # capped so a 100 TB table yields a sane task count (each partition then
-    # covers a wider stride — same plan, coarser granularity).
-    n_chunks = max(1, min(MAX_OUTPUT_PARTITIONS, math.ceil(max(n, 1) / batch_size)))
-    if n == 0:
-        extracted = df
-    elif mode == "keyset":
-        extracted = df.repartitionByRange(n_chunks, F.col(rowid))
-    else:
-        extracted = df.repartition(n_chunks)
+    n_chunks, lake_version = _land(
+        spark, df, rowid, n, batch_size, out_path, "overwrite",
+        lake=lake and mode == "keyset",
+    )
     entry = {
         "table": name,
         "rowid": rowid,
@@ -177,17 +207,8 @@ def sync_table(
         "chunks": n_chunks,
         "path": out_path,
     }
-    if lake and mode == "keyset":
-        from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable
-        from mysql_to_clickhouse_sync_spark.streaming.cdc import as_state
-
-        table = LakeTable(
-            spark, out_path, keys=[rowid], version_cols=[rowid]
-        )
-        table.merge(as_state(extracted))
-        entry["lake_version"] = table.current_version()
-    else:
-        extracted.write.mode("overwrite").parquet(out_path)
+    if lake_version is not None:
+        entry["lake_version"] = lake_version
     return entry
 
 
@@ -263,17 +284,12 @@ def _resume_table(
     _, mx, n = table_bounds(delta, rowid)
     if n == 0:
         return {**entry, "last_delta_rows": 0}
-    n_chunks = max(1, min(MAX_OUTPUT_PARTITIONS, math.ceil(n / batch_size)))
-    chunked = delta.repartitionByRange(n_chunks, F.col(rowid))
-    if "lake_version" in entry:
-        from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable
-        from mysql_to_clickhouse_sync_spark.streaming.cdc import as_state
-
-        table = LakeTable(spark, entry["path"], keys=[rowid], version_cols=[rowid])
-        table.merge(as_state(chunked))
-        entry = {**entry, "lake_version": table.current_version()}
-    else:
-        chunked.write.mode("append").parquet(entry["path"])
+    _, lake_version = _land(
+        spark, delta, rowid, n, batch_size, entry["path"], "append",
+        lake="lake_version" in entry,
+    )
+    if lake_version is not None:
+        entry = {**entry, "lake_version": lake_version}
     return {
         **entry,
         "max_id": mx,

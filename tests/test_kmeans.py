@@ -8,6 +8,7 @@ import io
 from contextlib import redirect_stdout
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from mysql_to_clickhouse_sync_spark.operators.kmeans import (
@@ -17,6 +18,7 @@ from mysql_to_clickhouse_sync_spark.operators.kmeans import (
     PQ_SUBDIM,
     QUANT,
     _assign,
+    _local_cents,
     _quantized,
     kmeans_fit,
     q_kmeans,
@@ -105,6 +107,16 @@ def test_quantization_grid_is_exact():
         np.float64
     )
     assert (via_double == via_long_double).all()
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_local_cents_rejects_non_finite(spark, bad):
+    """A non-finite centroid value has no SQL literal: it must fail at the
+    source with its cid, not as a parse error of the generated VALUES."""
+    rows = [(0, [1.0, 2.0]), (7, [0.5, bad])]
+    with pytest.raises(ValueError, match="cid=7"):
+        _local_cents(spark, rows)
+    assert _local_cents(spark, rows[:1]).collect()[0].cvec == [1.0, 2.0]
 
 
 def test_ivfpq_output_contract(spark):

@@ -9,7 +9,10 @@ from __future__ import annotations
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from mysql_to_clickhouse_sync_spark.functions.lsh_guard import cap_buckets
+from mysql_to_clickhouse_sync_spark.functions.lsh_guard import (
+    band_pairs,
+    cap_buckets,
+)
 from mysql_to_clickhouse_sync_spark.operators.dedup import (
     minhash_lsh_candidates,
     simhash_banded_pairs,
@@ -34,6 +37,63 @@ def test_cap_buckets_split_and_audit(spark):
     audit = dropped.collect()
     assert len(audit) == 1
     assert audit[0].k == "big" and audit[0].bucket_n == 10
+    # band_pairs arms the same split: the big cell's 45 pairs are the
+    # only candidates, and the cap removes exactly them
+    assert band_pairs(bands, "id", ["k"]).count() == 45
+    assert band_pairs(bands, "id", ["k"], max_bucket=5).count() == 0
+
+
+# Hand-built band table: (id, label, band) rows; the cell is (label, band).
+_CELLS = {
+    ("x", 0): [1, 2, 3],
+    ("x", 1): [2, 1],  # (1, 2) again: a pair sharing two cells
+    ("x", 2): [3],  # singleton: no self-pair
+    ("y", 0): [5, 4],
+    ("z", 0): list(range(10, 16)),  # 6 members: above the cap below
+}
+
+
+def _cell_pairs(label, ids):
+    return {(label, a, b) for a in ids for b in ids if a < b}
+
+
+def test_band_pairs_on_hand_built_bands(spark):
+    bands = spark.createDataFrame(
+        [
+            Row(id=i, label=label, band=band)
+            for (label, band), ids in _CELLS.items()
+            for i in ids
+        ]
+    )
+    cells = ["label", "band"]
+
+    got = band_pairs(bands, "id", cells, carry=("label",)).collect()
+    assert got[0].__fields__ == ["label", "id_a", "id_b"]
+    triples = [(r.label, r.id_a, r.id_b) for r in got]
+    # once per pair, carried label intact, ordered, never a self-pair
+    assert len(triples) == len(set(triples))
+    assert all(a < b for _, a, b in triples)
+    expected = set().union(
+        *[_cell_pairs(label, ids) for (label, _), ids in _CELLS.items()]
+    )
+    assert set(triples) == expected
+    assert triples.count(("x", 1, 2)) == 1
+
+    capped = {
+        (r.label, r.id_a, r.id_b)
+        for r in band_pairs(
+            bands, "id", cells, max_bucket=5, carry=("label",)
+        ).collect()
+    }
+    _, audit = cap_buckets(bands, cells, 5)
+    audited = {(r.label, r.band) for r in audit.collect()}
+    excluded = {
+        cell
+        for cell, ids in _CELLS.items()
+        if not _cell_pairs(cell[0], ids) <= capped
+    }
+    assert excluded == audited == {("z", 0)}
+    assert capped == expected - _cell_pairs("z", _CELLS[("z", 0)])
 
 
 def _docs(spark):

@@ -13,7 +13,9 @@ exactly the boilerplate-rich regime that melts LSH buckets.
 For each generator (MinHash-LSH bands, SimHash pigeonhole chunks) it
 reports, unguarded vs cap_buckets(DEFAULT_MAX_BUCKET):
   * the bucket-size distribution top (the hot keys themselves),
-  * candidate-pair count and wall time to a forced full count.
+  * candidate-pair count and wall time to a forced full count (MinHash:
+    band_pairs over the cached band table; SimHash: simhash_banded_pairs,
+    including its hamming re-score).
 
 Usage:
   python tools/lang_skew_stress.py [--copies 25] [--dominant-pct 90]
@@ -83,13 +85,15 @@ def main() -> int:
 
     from mysql_to_clickhouse_sync_spark.functions.lsh_guard import (
         DEFAULT_MAX_BUCKET,
+        band_pairs,
     )
     from mysql_to_clickhouse_sync_spark.operators.dedup import (
+        MINHASH_CELL,
         NUM_HASHES,
-        _simhash_chunk_bounds,
+        SIMHASH_CELL,
         minhash_band_table,
-        minhash_lsh_candidates,
         minhash_signatures_table,
+        simhash_band_table,
         simhash_banded_pairs,
         simhash_table,
     )
@@ -111,7 +115,7 @@ def main() -> int:
     # describe exactly the scheme the guard sees
     sigs = minhash_signatures_table(docs, "doc_id", "text", NUM_HASHES)
     bands = minhash_band_table(sigs).cache()
-    row, top = bucket_stats(bands, ["band_idx", "bucket"])
+    row, top = bucket_stats(bands, MINHASH_CELL)
     print(
         f"minhash buckets: {row.n_buckets:,}, max={row.max_n}, "
         f"analytic pairs={int(row.pairs):,}; "
@@ -119,7 +123,9 @@ def main() -> int:
     )
     for cap in (None, DEFAULT_MAX_BUCKET):
         t0 = time.time()
-        n_cand = minhash_lsh_candidates(docs, max_bucket=cap).count()
+        # the band self-join alone: minhash_lsh_candidates returns exactly
+        # these pairs (its re-score keeps every candidate)
+        n_cand = band_pairs(bands, "doc_id", MINHASH_CELL, cap).count()
         print(
             f"minhash candidates (cap={cap}): {n_cand:,} "
             f"in {time.time() - t0:.1f}s"
@@ -128,18 +134,8 @@ def main() -> int:
     # --- SimHash chunks ---------------------------------------------------
     sh = simhash_table(docs, extra_cols=("lang",)).cache()
     sh.count()
-    chunk_cols = [
-        F.shiftright(F.col("simhash"), start).bitwiseAND(
-            F.lit((1 << width) - 1)
-        )
-        for start, width in _simhash_chunk_bounds()
-    ]
-    sbands = sh.select(
-        "doc_id",
-        "lang",
-        F.posexplode(F.array(*chunk_cols)).alias("chunk_idx", "chunk_val"),
-    )
-    row, top = bucket_stats(sbands, ["lang", "chunk_idx", "chunk_val"])
+    sbands = simhash_band_table(sh)
+    row, top = bucket_stats(sbands, SIMHASH_CELL)
     print(
         f"simhash buckets: {row.n_buckets:,}, max={row.max_n}, "
         f"analytic pairs={int(row.pairs):,}; "

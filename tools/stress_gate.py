@@ -177,15 +177,18 @@ def main() -> int:
         DEFAULT_MAX_BUCKET as CAP,
     )
     from mysql_to_clickhouse_sync_spark.operators.dedup import (
+        MINHASH_CELL,
         NUM_HASHES,
-        _simhash_chunk_bounds,
+        SIMHASH_CELL,
         minhash_band_table,
         minhash_lsh_candidates,
         minhash_signatures_table,
+        simhash_band_table,
         simhash_banded_pairs,
         simhash_table,
     )
     from mysql_to_clickhouse_sync_spark.operators.similarity import (
+        EMB_CELL,
         banded_neardup_pairs,
         embedding_band_table,
         with_norm,
@@ -204,7 +207,7 @@ def main() -> int:
 
     sigs = minhash_signatures_table(docs, "doc_id", "text", NUM_HASHES)
     mbands = minhash_band_table(sigs).cache()
-    max_n, all_p, cap_p = bucket_bounds(mbands, ["band_idx", "bucket"], CAP)
+    max_n, all_p, cap_p = bucket_bounds(mbands, MINHASH_CELL, CAP)
     t0 = time.time()
     n_cand = minhash_lsh_candidates(docs).count()  # DEFAULT arguments
     dt = time.time() - t0
@@ -219,20 +222,8 @@ def main() -> int:
 
     sh = simhash_table(docs, extra_cols=("lang",)).cache()
     sh.count()
-    chunk_cols = [
-        F.shiftright(F.col("simhash"), start).bitwiseAND(
-            F.lit((1 << width) - 1)
-        )
-        for start, width in _simhash_chunk_bounds()
-    ]
-    sbands = sh.select(
-        "doc_id",
-        "lang",
-        F.posexplode(F.array(*chunk_cols)).alias("chunk_idx", "chunk_val"),
-    )
-    max_n, all_p, cap_p = bucket_bounds(
-        sbands, ["lang", "chunk_idx", "chunk_val"], CAP
-    )
+    sbands = simhash_band_table(sh)
+    max_n, all_p, cap_p = bucket_bounds(sbands, SIMHASH_CELL, CAP)
     gate.check(
         "simhash corpus exercises guard",
         max_n > CAP,
@@ -258,7 +249,7 @@ def main() -> int:
     emb.count()
     normed = with_norm(emb).filter(F.col("norm") > 0)
     ebands = embedding_band_table(normed)
-    max_n, all_p, cap_p = bucket_bounds(ebands, ["label", "band", "bucket"], CAP)
+    max_n, all_p, cap_p = bucket_bounds(ebands, EMB_CELL, CAP)
     gate.check(
         "embedding corpus exercises guard",
         max_n > CAP,
