@@ -46,6 +46,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mysql_to_clickhouse_sync_spark.footers import column_stats
 from mysql_to_clickhouse_sync_spark.streaming.cdc import (
     apply_changelog,
     as_state,
@@ -117,14 +118,12 @@ def _footer_minmax(
     """Exact global [min, max] per `col` over exactly the files in
     `pairs` ((abs_path, rel_path), rel carrying any Hive segments) —
     the METADATA-ONLY twin of `df.agg(min, max)` over those files,
-    merging parquet footer statistics across row groups the same way
-    _footer_stats does. Returns {col: [mn, mx] | None} with None
+    merging parquet footer statistics across row groups
+    (footers.column_stats). Returns {col: [mn, mx] | None} with None
     meaning the column is all-NULL / zero rows everywhere (the agg
     would return NULL too), or None for the whole call when any footer
     lacks trustworthy numeric stats — the caller then falls back to
     the Spark agg, so this is purely a fast path."""
-    import pyarrow.parquet as pq
-
     out: dict = {c: None for c in cols}
     for f, rel in pairs:
         part: dict = {}
@@ -135,47 +134,21 @@ def _footer_minmax(
                     part[name] = int(val)
                 except ValueError:
                     pass
-        try:
-            md = pq.read_metadata(f)
-        except Exception:
+        got = column_stats(f, [c for c in cols if c not in part])
+        if got is None:
             return None
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+        num_rows, stats = got
         for c in cols:
             if c in part:
-                if md.num_rows == 0:
+                if num_rows == 0:
                     continue
                 lo = hi = part[c]
-            elif c in idx:
-                lo = hi = None
-                for rg in range(md.num_row_groups):
-                    row = md.row_group(rg)
-                    try:
-                        st = row.column(idx[c]).statistics
-                    except Exception:
-                        # pyarrow raises (not None) for stat-less types
-                        return None
-                    if st is None:
-                        return None
-                    if not st.has_min_max:
-                        # an all-NULL row group legitimately has no
-                        # min/max and contributes nothing; anything
-                        # else is a writer that skipped stats
-                        if (
-                            st.has_null_count
-                            and st.null_count == row.num_rows
-                        ):
-                            continue
-                        return None
-                    if isinstance(st.min, bool) or not isinstance(
-                        st.min, (int, float)
-                    ):
-                        return None
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
+            elif stats[c] is None:
+                return None
+            else:
+                lo, hi, _ = stats[c]
                 if lo is None:
                     continue
-            else:
-                return None
             cur = out[c]
             out[c] = (
                 [lo, hi]

@@ -51,7 +51,13 @@ def filter_tables(
 
 
 def jdbc_bounds_query(table: str, rowid: str) -> str:
-    """Pushed-down bounds aggregate (S:163 semantics incl. IFNULL-0)."""
+    """Pushed-down bounds aggregate (S:163 semantics incl. IFNULL-0).
+
+    The JDBC-source twin of ``sync.footer_bounds``: against a real MySQL
+    the bounds are pushed to the server and served from the PK index with
+    no table scan, as the parquet source serves them from its footers.
+    The result is a derived table: read it as the JDBC ``dbtable`` to get
+    the ``min_id``/``max_id`` that ``read_table_chunked`` takes."""
     return (
         f"(SELECT COALESCE(MIN({rowid}), 0) AS min_id,"
         f" COALESCE(MAX({rowid}), 0) AS max_id FROM {table}) AS bounds"

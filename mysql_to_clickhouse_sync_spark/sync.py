@@ -16,11 +16,24 @@ a JSON manifest recording per-table bounds + row counts — the analog of
 metadata.txt's binlog position, from which the streaming CDC phase
 (streaming/cdc.py) resumes.
 
+Bounds (step 3) come from parquet footers first (``table_bounds``): MySQL
+answers the reference's MIN/MAX from the PK index without a scan, and the
+footers' per-row-group min/max/null-count stats answer it here without a
+Spark job. The Spark min/max/count aggregate remains the fallback wherever
+footers cannot answer exactly: a path that is not a plain file listing, an
+unreadable footer, missing or non-integer rowid stats, and on resume a file
+that straddles the last max or lacks its null count (``footer_bounds``).
+``sources/jdbc.jdbc_bounds_query`` is the JDBC-source twin of footer
+bounds: against a real MySQL the bounds query is pushed down and served
+from the PK index. A resume reads footers before it builds a DataFrame, so
+a table with no new rows runs no Spark job at all; a table that lands as
+one chunk is coalesced to one partition instead of range-shuffled.
+
 Tables sync concurrently, as in the reference's table-level pool
 (``max_workers``, default 10; S:192-199, S:237): a driver-side thread pool
 of min(max_workers, #tables) threads dispatches one table each on the one
 shared session, so each table's driver-side planning and scheduling
-(bounds aggregate, range sample, shuffle, write) overlaps the other
+(schema inference, range sample, shuffle, write) overlaps the other
 tables' jobs. The sync is driver-bound, not executor-bound: on a 10-table
 sf0.001 source on 4 cores, a sequential snapshot spent 1.9 s of 3.7 s with
 only the driver busy; ten workers brought it to 1.7 s. ``max_workers=1``
@@ -42,6 +55,7 @@ import math
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor, as_completed
+from functools import cache, partial
 from typing import Callable
 
 from pyspark import inheritable_thread_target
@@ -49,6 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mysql_to_clickhouse_sync_spark.catalog import ROWID, TABLES, load_table
+from mysql_to_clickhouse_sync_spark.footers import column_stats
 from mysql_to_clickhouse_sync_spark.sources.jdbc import filter_tables
 
 DEFAULT_BATCH_SIZE = 1000  # reference --batch_size default (S:236)
@@ -56,8 +71,107 @@ DEFAULT_MAX_WORKERS = 10  # reference --max_workers default (S:237)
 MAX_OUTPUT_PARTITIONS = 64
 
 
-def table_bounds(df: DataFrame, rowid: str) -> tuple[int, int, int]:
-    """(min, max, count) with the reference's IFNULL-0 empty-table sentinel."""
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips: ``_SUCCESS``, ``.crc`` sidecars,
+    in-flight ``._COPYING_`` copies (``_k=v`` is a partition, not hidden)."""
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def _data_files(path: str) -> list[str] | None:
+    """The files ``spark.read.parquet(path)`` reads: the file itself, or a
+    directory's files minus hidden names. None (not a plain listing) for a
+    missing or empty path and for a directory with a subdirectory
+    (partitions or nested output), which only Spark's file index reads
+    faithfully."""
+    if os.path.isfile(path):
+        return [path]
+    try:
+        entries = [e for e in os.scandir(path) if not _hidden(e.name)]
+    except OSError:
+        return None
+    if not entries or not all(e.is_file() for e in entries):
+        return None
+    return [e.path for e in entries]
+
+
+def footer_bounds(
+    path: str, rowid: str | None, above: int | None = None
+) -> tuple[int, int, int] | None:
+    """``table_bounds`` answered from the parquet footers of the files at
+    ``path`` (footers.column_stats), or None when they cannot answer it.
+
+    Without ``above`` the count is the files' row total (``count(*)``:
+    NULL keys count) and min/max merge the files' rowid stats. With
+    ``above`` only rows whose rowid is > ``above`` count: a file whose
+    min is > ``above`` contributes its rows minus its NULL keys, a file
+    whose max is <= ``above`` (or whose keys are all NULL) contributes
+    nothing. None — fall back to the Spark aggregate — when the file set
+    is not a plain listing (``_data_files``), a footer cannot be read, a
+    file lacks integer min/max stats for ``rowid``, or, with ``above``, a
+    file straddles ``above`` or lacks its null count. An unreadable
+    source thus still fails in Spark as before; it never reads as 0 rows.
+    ``rowid=None`` (a PK-less table) counts rows only: (0, 0, count)."""
+    files = _data_files(path)
+    if files is None:
+        return None
+    mn = mx = None
+    n = 0
+    for f in files:
+        got = column_stats(f, [rowid] if rowid is not None else [])
+        if got is None:
+            return None
+        rows, stats = got
+        if rowid is None:
+            n += rows
+            continue
+        if stats[rowid] is None:
+            return None
+        lo, hi, nulls = stats[rowid]
+        if lo is not None and not isinstance(lo, int):
+            return None
+        if above is None:
+            n += rows
+        elif lo is None or hi <= above:
+            continue
+        elif lo > above and nulls is not None:
+            n += rows - nulls
+        else:
+            return None
+        if lo is not None:
+            mn = lo if mn is None else min(mn, lo)
+            mx = hi if mx is None else max(mx, hi)
+    return mn or 0, mx or 0, n
+
+
+def table_bounds(
+    load: Callable[[], DataFrame],
+    rowid: str | None,
+    above: int | None = None,
+    path: str | None = None,
+) -> tuple[int, int, int]:
+    """(min, max, count) of ``rowid`` over the rows whose rowid is >
+    ``above`` (all rows when None), with the reference's IFNULL-0
+    empty-table sentinel; ``rowid=None`` gives (0, 0, row count).
+
+    Footer first: given the source ``path``, the answer comes from the
+    parquet footers (``footer_bounds``) with no Spark job — the analog
+    of MySQL serving MIN/MAX from the PK index. When footers cannot
+    answer (see ``footer_bounds`` for the cases), or without ``path``,
+    the Spark aggregate over ``load()`` answers: min/max/count(*), or
+    ``count()`` without a rowid."""
+    if path is not None:
+        got = footer_bounds(path, rowid, above)
+        if got is not None:
+            return got
+    df = load()
+    if rowid is None:
+        return 0, 0, df.count()
+    if above is not None:
+        df = df.filter(F.col(rowid) > above)
     row = df.agg(
         F.coalesce(F.min(rowid), F.lit(0)).alias("mn"),
         F.coalesce(F.max(rowid), F.lit(0)).alias("mx"),
@@ -66,13 +180,17 @@ def table_bounds(df: DataFrame, rowid: str) -> tuple[int, int, int]:
     return int(row.mn), int(row.mx), int(row.n)
 
 
+def _source_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def _load_any(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Catalog tables go through load_table (NTZ normalization etc.);
     discovered tables outside the static catalog read directly — the
     analog of a SHOW TABLES hit the metadata query knows nothing about."""
     if name in TABLES:
         return load_table(spark, sf_dir, name)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return spark.read.parquet(_source_path(sf_dir, name))
 
 
 def _per_table(
@@ -133,10 +251,13 @@ def _land(
     Chunk plan -> physical partitioning: ceil(n/batch) ranges on the key
     (a hash spread without one), capped so a 100 TB table yields a sane
     task count (each partition then covers a wider stride — same plan,
-    coarser granularity)."""
+    coarser granularity). A single chunk written as parquet is a narrow
+    ``coalesce(1)``: one job, no Exchange."""
     n_chunks = max(1, min(MAX_OUTPUT_PARTITIONS, math.ceil(max(n, 1) / batch_size)))
     if n == 0:
         chunked = df
+    elif n_chunks == 1 and not lake:
+        chunked = df.coalesce(1)
     elif rowid is not None:
         chunked = df.repartitionByRange(n_chunks, F.col(rowid))
     else:
@@ -171,7 +292,9 @@ def sync_table(
     scan hash-spread over ceil(n/batch) output chunks: MySQL's LIMIT
     paging without ORDER BY carries no row order contract anyway, and the
     scan needs no key to parallelize. Such tables cannot resume by key —
-    incremental_sync re-extracts them in full (mode == "offset").
+    incremental_sync re-extracts them in full (mode == "offset"). Bounds,
+    and the row count of a PK-less table, come from ``table_bounds``:
+    source footers first, a Spark aggregate or ``count()`` as fallback.
 
     ``lake=True`` lands keyset tables through the sinks/merge.py
     LakeTable instead of a plain parquet overwrite: the snapshot is
@@ -185,13 +308,10 @@ def sync_table(
     rowid = ROWID.get(name)
     df = _load_any(spark, sf_dir, name)
     out_path = os.path.join(out_dir, name)
-    if rowid is not None and rowid in df.columns:
-        mn, mx, n = table_bounds(df, rowid)
-        mode = "keyset"
-    else:
-        rowid = None
-        mn, mx, n = 0, 0, df.count()  # the reference's (0,0) sentinel
-        mode = "offset"
+    if rowid is None or rowid not in df.columns:
+        rowid = None  # bounds are then the reference's (0,0) sentinel
+    mode = "offset" if rowid is None else "keyset"
+    mn, mx, n = table_bounds(lambda: df, rowid, path=_source_path(sf_dir, name))
 
     n_chunks, lake_version = _land(
         spark, df, rowid, n, batch_size, out_path, "overwrite",
@@ -279,11 +399,15 @@ def _resume_table(
         # PK-less table: no key to resume by (the reference's offset-
         # paged tables have the same property) — full re-extract.
         return sync_table(spark, sf_dir, out_dir, name, batch_size)
-    df = _load_any(spark, sf_dir, name)
-    delta = df.filter(F.col(rowid) > last_max)
-    _, mx, n = table_bounds(delta, rowid)
+    # Bounds before the DataFrame: a table with no new rows costs footer
+    # reads only. A footer fallback loads the frame once for both uses.
+    load = cache(partial(_load_any, spark, sf_dir, name))
+    _, mx, n = table_bounds(
+        load, rowid, above=last_max, path=_source_path(sf_dir, name)
+    )
     if n == 0:
         return {**entry, "last_delta_rows": 0}
+    delta = load().filter(F.col(rowid) > last_max)
     _, lake_version = _land(
         spark, delta, rowid, n, batch_size, entry["path"], "append",
         lake="lake_version" in entry,
@@ -311,9 +435,10 @@ def incremental_sync(
 
     Reads out_dir/manifest.json, appends the delta per table (up to
     ``max_workers`` tables at once), and rewrites the manifest with
-    advanced bounds. Tables without new rows are skipped entirely (the
-    predicate prunes at the scan, so a no-op sync reads only footers + the
-    bounds aggregate). If a table fails, the manifest is left as it was.
+    advanced bounds. Tables without new rows are skipped entirely: their
+    bounds come from the source footers, so a no-op sync runs no Spark job
+    (the footer fallbacks of ``table_bounds`` aside). If a table fails, the
+    manifest is left as it was.
     """
     manifest_path = os.path.join(out_dir, "manifest.json")
     with open(manifest_path) as fh:
