@@ -746,7 +746,7 @@ def q_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable
+    from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable, expect
     from mysql_to_clickhouse_sync_spark.streaming.cdc import (
         OP_COL,
         UPSERT,
@@ -777,7 +777,7 @@ def q_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         table.merge(
             ranked_new.withColumn(OP_COL, F.lit(UPSERT)), batch_id=1
         )
-        assert table.current_version() == 1
+        expect("lake version", 1, table.current_version())
         persisted = live_rows(table.raw()).select(
             "vec_id", "centroid_id", "rn"
         )

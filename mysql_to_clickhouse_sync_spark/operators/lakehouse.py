@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from mysql_to_clickhouse_sync_spark.catalog import EVENTS_US_CTE, load_table
 from mysql_to_clickhouse_sync_spark.registry import declare
-from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable
+from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable, expect
 from mysql_to_clickhouse_sync_spark.streaming.cdc import (
     DELETE,
     OP_COL,
@@ -129,7 +129,7 @@ def _with_committed_table(spark, batches, n_buckets, reader, cols):
         )
         for i, b in enumerate(batches):
             table.merge(b, batch_id=i)
-        assert table.versions() == [0, 1, 2]
+        expect("lake versions", [0, 1, 2], table.versions())
         out = reduce(
             lambda a, b: a.unionByName(b), reader(table)
         ).select(*cols)
@@ -254,7 +254,10 @@ def q_lake_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         pruned, total, nread = table.read_pruned(
             "user_id", SKIP_LO, SKIP_HI
         )
-        assert nread <= total
+        if nread > total:
+            raise RuntimeError(
+                f"pruned scan read {nread} files, more than the {total} held"
+            )
         out = (
             pruned.filter(F.col("user_id").between(SKIP_LO, SKIP_HI))
             .select("user_id", "event_id", "ts", "event_type", "value")
@@ -547,7 +550,11 @@ def q_lake_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def one(kind: str, pu: int) -> DataFrame:
             pruned, total, nread = table.read_bloom_pruned("user_id", pu)
-            assert nread <= total
+            if nread > total:
+                raise RuntimeError(
+                    f"bloom-pruned scan read {nread} files,"
+                    f" more than the {total} held"
+                )
             return (
                 pruned.filter(F.col("user_id") == pu)
                 .agg(F.count("*").alias("n_rows"))
@@ -639,14 +646,16 @@ def q_lake_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         table.merge(narrow, batch_id=0)
         table.merge(wide, batch_id=1)
-        assert table.manifest(0)["schema_version"] == 0
-        assert table.manifest(1)["schema_version"] == 1
-        assert table.manifest(1)["ddl"], "evolving commit must carry DDL"
+        expect("v0 schema_version", 0, table.manifest(0)["schema_version"])
+        expect("v1 schema_version", 1, table.manifest(1)["schema_version"])
+        if not table.manifest(1)["ddl"]:
+            raise RuntimeError("evolving commit v1 carries no DDL")
         frames = []
         for v in table.versions():
             d = table.read(version=v)
             if "event_type" not in d.columns:
-                assert v == 0  # only the pre-drift version lacks it
+                # only the pre-drift version lacks it
+                expect("version without event_type", 0, v)
                 d = d.withColumn("event_type", F.lit(None).cast("string"))
             frames.append(
                 d.select("user_id", "event_id", "ts", "value", "event_type")

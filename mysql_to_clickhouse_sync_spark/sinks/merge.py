@@ -76,6 +76,13 @@ def _bloom_pos(value, seed: int, m: int) -> int:
     return int(h, 16) % m
 
 
+def expect(what: str, expected, observed) -> None:
+    """Check a lake invariant a declared query relies on, naming both
+    values when it fails (an ``assert`` vanishes under ``python -O``)."""
+    if observed != expected:
+        raise RuntimeError(f"{what}: expected {expected!r}, observed {observed!r}")
+
+
 class CommitConflictError(RuntimeError):
     """Another writer committed between this writer reading the table and
     publishing its own generation (Delta-style optimistic concurrency).

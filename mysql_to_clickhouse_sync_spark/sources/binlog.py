@@ -161,16 +161,14 @@ def read_envelope_stream(
 
 
 def to_debezium_envelopes(
-    df: DataFrame, cols: list[str], is_delete: Column, extra_cols: tuple = ()
+    df: DataFrame, cols: list[str], is_delete: Column
 ) -> DataFrame:
     """Serialize rows to Debezium envelope JSON strings (single `value`
     column) — deletes put the row image in `before`, everything else in
     `after`. The inverse of parse_debezium; used by the declared queries to
-    synthesize a binlog feed from fixture tables. ``extra_cols`` are carried
-    through unchanged (e.g. a rotation-slice key for a partitioned write)."""
+    synthesize a binlog feed from fixture tables."""
     payload = F.struct(*cols)
     return df.select(
-        *extra_cols,
         F.to_json(
             F.struct(
                 F.when(is_delete, payload).alias("before"),

@@ -25,10 +25,6 @@ the oracle can ignore batching entirely.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,6 +46,7 @@ from mysql_to_clickhouse_sync_spark.streaming.cdc import (
     latest_per_key,
     live_rows,
 )
+from mysql_to_clickhouse_sync_spark.streaming.driver import FileStream
 from mysql_to_clickhouse_sync_spark.streaming.tuning import tuned
 
 SPLIT_TS = "2024-01-20 00:00:00"
@@ -91,10 +88,6 @@ def s_binlog_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     payload_schema = events.select(*COLS).schema
 
-    workdir = tempfile.mkdtemp(prefix="binlog_replay_")
-    in_dir = os.path.join(workdir, "feed")
-    os.makedirs(in_dir)
-
     def merge(batch_df: DataFrame, _epoch: int) -> None:
         state["df"] = apply_changelog(
             state["df"],
@@ -103,67 +96,23 @@ def s_binlog_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             version_cols=["ts", "event_id"],
         ).localCheckpoint(eager=True)
 
-    # Round 11: serialize ALL slices in ONE partitioned write job (guide
-    # §1.2 — the per-slice coalesce(1) writes scanned and enveloped the
-    # post-split events once PER SLICE, 3 jobs for one pass of work).
-    # repartition(N, slice) puts each slice wholly in one task, so every
-    # slice=i directory holds exactly one part file; files still move into
-    # the tailed directory one rotation at a time, preserving the
-    # micro-batch slicing (which the oracle is independent of anyway).
-    slices_dir = os.path.join(workdir, "slices")
-    tagged = post.withColumn(
-        "slice", (F.col("event_id") % N_SLICES).cast("int")
-    )
-    to_debezium_envelopes(
-        tagged,
-        COLS,
-        F.col("event_type") == "error",
-        extra_cols=("slice",),
-    ).repartition(N_SLICES, "slice").write.partitionBy("slice").mode(
-        "overwrite"
-    ).text(slices_dir)
-
-    def emit_rotated_file(i: int) -> None:
-        # Move slice i under the binlog-style name the offsets refer to.
-        d = os.path.join(slices_dir, f"slice={i}")
-        dest = os.path.join(in_dir, f"binlog.{i + 1:06d}.jsonl")
-        parts = (
-            [f for f in os.listdir(d) if f.startswith("part-")]
-            if os.path.isdir(d)
-            else []
+    # Deliberately un-ordered slices: event_id % N interleaves time. Each
+    # slice lands as one rotated envelope file (binlog.00000i.jsonl), the
+    # name the source's {file, pos} offsets refer to.
+    slices = [
+        to_debezium_envelopes(
+            post.filter(F.col("event_id") % N_SLICES == i),
+            COLS,
+            F.col("event_type") == "error",
         )
-        if len(parts) > 1:
-            # A retried task can leave a second part file; rotating only
-            # the first would drop the other's rows.
-            raise RuntimeError(
-                f"slice {i} has {len(parts)} part files in {d}: {sorted(parts)}"
-            )
-        if parts:
-            os.rename(os.path.join(d, parts[0]), dest)
-        else:  # empty slice: still rotate a file so the offset advances
-            open(dest, "w").close()
-
-    query = None
-    try:
-        register(spark)
-        raw = (
-            spark.readStream.format(FORMAT_NAME)
-            .option("path", in_dir)
-            .load()
+        for i in range(N_SLICES)
+    ]
+    register(spark)
+    with FileStream(spark) as fs:
+        fs.run(
+            slices,
+            merge,
+            lambda raw: parse_debezium(raw, payload_schema),
+            fmt=FORMAT_NAME,
         )
-        stream = (
-            parse_debezium(raw, payload_schema)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        )
-        # Deliberately un-ordered slices: event_id % N interleaves time.
-        for i in range(N_SLICES):
-            emit_rotated_file(i)
-            if query is None:
-                query = stream.start()
-            query.processAllAvailable()
-        return live_rows(state["df"])
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
+    return live_rows(state["df"])

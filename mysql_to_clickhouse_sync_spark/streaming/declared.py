@@ -15,15 +15,11 @@ synchronously, and return the final result as a batch DataFrame.
     file-by-file (two deterministic micro-batches), append mode: only windows
     the watermark has closed are emitted.
 
-Determinism: micro-batch boundaries are forced by writing file N, calling
-processAllAvailable(), then writing file N+1 — no reliance on file-listing
-order.
+Every stream here runs its micro-batches through streaming/driver.py, which
+forces one micro-batch per slice.
 """
 
 from __future__ import annotations
-
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,15 +27,17 @@ from pyspark.sql.window import Window
 
 from mysql_to_clickhouse_sync_spark.catalog import EVENTS_US_CTE, load_table
 from mysql_to_clickhouse_sync_spark.registry import declare
-from mysql_to_clickhouse_sync_spark.streaming.tuning import tuned
 from mysql_to_clickhouse_sync_spark.streaming.cdc import (
     DELETE,
     OP_COL,
     UPSERT,
     apply_changelog,
     as_state,
+    latest_per_key,
     live_rows,
 )
+from mysql_to_clickhouse_sync_spark.streaming.driver import FileStream
+from mysql_to_clickhouse_sync_spark.streaming.tuning import tuned
 
 SPLIT_TS = "2024-01-20 00:00:00"
 N_STREAM_FILES = 3
@@ -94,8 +92,6 @@ def s_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot_src = events.filter(F.col("ts") < F.lit(SPLIT_TS)).select(cols)
     # The snapshot state: latest row per user at the split point (what the
     # reference's bulk copy would have landed in ClickHouse).
-    from mysql_to_clickhouse_sync_spark.streaming.cdc import latest_per_key
-
     state = as_state(
         latest_per_key(
             snapshot_src,
@@ -104,11 +100,6 @@ def s_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     changelog = _changelog_from_events(events).select(*cols, OP_COL)
-
-    workdir = tempfile.mkdtemp(prefix="cdc_apply_")
-    in_dir = f"{workdir}/changelog"
-    ckpt = f"{workdir}/ckpt"
-    schema = changelog.schema
 
     # Split the changelog into N deterministic slices (by event_id mod N,
     # replayed in order) — each slice becomes one micro-batch.
@@ -127,32 +118,9 @@ def s_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             version_cols=["ts", "event_id"],
         ).localCheckpoint(eager=True)  # cut lineage between micro-batches
 
-    import os
-
-    from mysql_to_clickhouse_sync_spark.streaming.staging import (
-        stage_batch_files,
-    )
-
-    os.makedirs(in_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-        .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-    )
-    query = None
-    try:
-        for i, path in enumerate(stage_batch_files(slices, workdir)):
-            os.rename(path, os.path.join(in_dir, f"batch-{i}.parquet"))
-            if query is None:
-                query = stream.start()
-            query.processAllAvailable()
-        return live_rows(merged_state["df"])
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
+    with FileStream(spark) as fs:
+        fs.run(slices, merge_batch)
+    return live_rows(merged_state["df"])
 
 
 _TUMBLING_STREAM_ORACLE = """
@@ -188,51 +156,29 @@ def s_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     early = events.filter(F.col("ts") < F.lit(SPLIT_TS))
     late = events.filter(F.col("ts") >= F.lit(SPLIT_TS))
 
-    workdir = tempfile.mkdtemp(prefix="tumbling_stream_")
-    in_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    import os
+    def windowed(stream: DataFrame) -> DataFrame:
+        return (
+            stream.groupBy(
+                F.window("ts", "1 hour").alias("win"), F.col("event_type")
+            )
+            .agg(
+                F.count("*").alias("n_events"),
+                F.sum(F.col("value").cast("decimal(18,6)"))
+                .cast("decimal(18,2)")
+                .cast("double")
+                .alias("sum_value"),
+            )
+            .select(
+                F.col("win.start").alias("window_start"),
+                "event_type",
+                "n_events",
+                "sum_value",
+            )
+        )
 
-    os.makedirs(in_dir, exist_ok=True)
-    schema = events.schema
-    agg = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-        .groupBy(F.window("ts", "1 hour").alias("win"), F.col("event_type"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("decimal(18,2)")
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    sink = f"tumbling_{abs(hash(workdir)) % 10**9}"
-    query = None
-    try:
-        early.coalesce(1).write.mode("append").parquet(in_dir)
-        query = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.processAllAvailable()
-        late.coalesce(1).write.mode("append").parquet(in_dir)
-        query.processAllAvailable()
-        return spark.table(sink).localCheckpoint(eager=True)
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
+    with FileStream(spark) as fs:
+        out = fs.run([early, late], "complete", windowed)
+        return out.localCheckpoint(eager=True)
 
 
 _SESSION_STREAM_ORACLE = f"""
@@ -288,48 +234,25 @@ def s_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     early = events.filter(F.col("ts") < F.lit(SPLIT_TS))
     late = events.filter(F.col("ts") >= F.lit(SPLIT_TS))
 
-    workdir = tempfile.mkdtemp(prefix="session_stream_")
-    in_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    import os
+    def sessions(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", "1 hour")
+            .groupBy(
+                F.session_window(F.col("ts"), "30 minutes").alias("sw"),
+                F.col("user_id"),
+            )
+            .agg(F.count("*").alias("n_events"))
+            .select(
+                F.col("sw.start").alias("session_start"),
+                F.col("sw.end").alias("session_end"),
+                "user_id",
+                "n_events",
+            )
+        )
 
-    os.makedirs(in_dir, exist_ok=True)
-    agg = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-        .withWatermark("ts", "1 hour")
-        .groupBy(
-            F.session_window(F.col("ts"), "30 minutes").alias("sw"),
-            F.col("user_id"),
-        )
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
-    sink = f"sessions_{abs(hash(workdir)) % 10**9}"
-    query = None
-    try:
-        early.coalesce(1).write.mode("append").parquet(in_dir)
-        query = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.processAllAvailable()
-        late.coalesce(1).write.mode("append").parquet(in_dir)
-        query.processAllAvailable()
-        return spark.table(sink).localCheckpoint(eager=True)
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
+    with FileStream(spark) as fs:
+        out = fs.run([early, late], "append", sessions)
+        return out.localCheckpoint(eager=True)
 
 
 # The watermark mirrors Spark exactly: EventTimeStats tracks max event
@@ -359,7 +282,7 @@ def s_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark (late/open windows withheld — the semantics under test).
 
     FULL ORACLE (the third streaming query to carry one): under pinned
-    micro-batch boundaries (write file -> processAllAvailable) plus
+    micro-batch boundaries (one file per batch, streaming/driver.py) plus
     Spark's no-data flush batch (noDataMicroBatches, on by default), the
     append-mode output is exactly the windows with
     window_end <= max(event ts) - delay — stated directly in SQL. Pinned
@@ -372,48 +295,24 @@ def s_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     early = events.filter(F.col("ts") < F.lit(SPLIT_TS))
     late = events.filter(F.col("ts") >= F.lit(SPLIT_TS))
 
-    workdir = tempfile.mkdtemp(prefix="watermark_")
-    in_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    import os
-
-    os.makedirs(in_dir, exist_ok=True)
-    schema = events.select("event_id", "ts", "event_type", "value").schema
-
-    agg = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("win"), F.col("event_type"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            "event_type",
-            "n_events",
+    def closed_windows(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", "1 hour")
+            .groupBy(
+                F.window("ts", "1 hour").alias("win"), F.col("event_type")
+            )
+            .agg(F.count("*").alias("n_events"))
+            .select(
+                F.col("win.start").alias("window_start"),
+                "event_type",
+                "n_events",
+            )
         )
-    )
-    sink = f"sink_{abs(hash(workdir)) % 10**9}"
-    query = None
-    try:
-        early.coalesce(1).write.mode("append").parquet(in_dir)
-        query = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.processAllAvailable()
-        late.coalesce(1).write.mode("append").parquet(in_dir)
-        query.processAllAvailable()
+
+    with FileStream(spark) as fs:
+        out = fs.run([early, late], "append", closed_windows)
         # Materialize the emitted (closed) windows before tearing down.
-        out = spark.table(sink).localCheckpoint(eager=True)
-        return out
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
 
 
 def _kmeans_stream_oracle() -> str:
@@ -481,10 +380,6 @@ def s_kmeans_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = seed_centroids(qv, KMEANS_K)
 
     n_files = 3
-    workdir = tempfile.mkdtemp(prefix="kmeans_stream_")
-    in_dir = f"{workdir}/vectors"
-    ckpt = f"{workdir}/ckpt"
-    schema = qv.schema
     state = {"df": None}
 
     def accumulate(batch_df: DataFrame, _epoch: int) -> None:
@@ -508,44 +403,16 @@ def s_kmeans_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .localCheckpoint(eager=True)
             )
 
-    import os
-
-    from mysql_to_clickhouse_sync_spark.streaming.staging import (
-        stage_batch_files,
+    slices = [qv.filter(F.col("vec_id") % n_files == i) for i in range(n_files)]
+    with FileStream(spark) as fs:
+        fs.run(slices, accumulate)
+    return state["df"].select(
+        "cid",
+        "dim",
+        F.col("s").cast("bigint").alias("s"),
+        "n",
+        (F.col("s").cast("double") / F.col("n").cast("double")).alias("mean"),
     )
-
-    os.makedirs(in_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-        .writeStream.foreachBatch(accumulate)
-        .option("checkpointLocation", ckpt)
-    )
-    query = None
-    try:
-        slices = [
-            qv.filter(F.col("vec_id") % n_files == i) for i in range(n_files)
-        ]
-        for i, path in enumerate(stage_batch_files(slices, workdir)):
-            os.rename(path, os.path.join(in_dir, f"batch-{i}.parquet"))
-            if query is None:
-                query = stream.start()
-            query.processAllAvailable()
-        acc = state["df"]
-        return acc.select(
-            "cid",
-            "dim",
-            F.col("s").cast("bigint").alias("s"),
-            "n",
-            (F.col("s").cast("double") / F.col("n").cast("double")).alias(
-                "mean"
-            ),
-        )
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 STREAM_TOPK = 3
@@ -599,45 +466,20 @@ def s_topk_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     early = events.filter(F.col("ts") < F.lit(SPLIT_TS))
     late = events.filter(F.col("ts") >= F.lit(SPLIT_TS))
 
-    workdir = tempfile.mkdtemp(prefix="topk_stream_")
-    in_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    import os
-
-    os.makedirs(in_dir, exist_ok=True)
-    counts = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-        .groupBy("event_type", "user_id")
-        .agg(F.count("*").alias("n_events"))
+    w = Window.partitionBy("event_type").orderBy(
+        F.col("n_events").desc(), F.col("user_id")
     )
-    sink = f"topk_{abs(hash(workdir)) % 10**9}"
-    query = None
-    try:
-        early.coalesce(1).write.mode("append").parquet(in_dir)
-        query = (
-            counts.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.processAllAvailable()
-        late.coalesce(1).write.mode("append").parquet(in_dir)
-        query.processAllAvailable()
-        w = Window.partitionBy("event_type").orderBy(
-            F.col("n_events").desc(), F.col("user_id")
+    with FileStream(spark) as fs:
+        counts = fs.run(
+            [early, late],
+            "complete",
+            lambda s: s.groupBy("event_type", "user_id").agg(
+                F.count("*").alias("n_events")
+            ),
         )
         return (
-            spark.table(sink)
-            .withColumn("rank", F.row_number().over(w))
+            counts.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= STREAM_TOPK)
             .select("event_type", "user_id", "n_events", "rank")
             .localCheckpoint(eager=True)
         )
-    finally:
-        if query is not None:
-            query.stop()
-        spark.catalog.dropTempView(sink)  # the checkpointed frame survives
-        shutil.rmtree(workdir, ignore_errors=True)

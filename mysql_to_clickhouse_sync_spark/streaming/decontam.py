@@ -36,21 +36,8 @@ arrival rate and the benchmark size.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-from collections.abc import Iterator
-from typing import TYPE_CHECKING, Any
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from mysql_to_clickhouse_sync_spark.catalog import load_table
 from mysql_to_clickhouse_sync_spark.operators.quality import (
@@ -62,10 +49,9 @@ from mysql_to_clickhouse_sync_spark.operators.quality import (
 )
 from mysql_to_clickhouse_sync_spark.registry import declare
 from mysql_to_clickhouse_sync_spark.shipping import ensure_package_shipped
+from mysql_to_clickhouse_sync_spark.streaming.cdc import latest_per_key
+from mysql_to_clickhouse_sync_spark.streaming.driver import FileStream
 from mysql_to_clickhouse_sync_spark.streaming.tuning import tuned
-
-if TYPE_CHECKING:
-    import pandas as pd
 
 _STREAM_ORACLE = (
     decontam_bloom_sql()
@@ -105,75 +91,44 @@ def s_decontaminate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     early = train.filter(F.col("doc_id") <= split)
     late = train.filter(F.col("doc_id") > split)
 
-    workdir = tempfile.mkdtemp(prefix="decontam_stream_")
-    in_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(train.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
     ensure_package_shipped(spark)
     # stream-static equi-join on a constant key = the broadcast of the
     # one-row bitmap; the probe itself is a codegen'd higher-order
     # expression over the document's own shingle array.
-    flags = (
-        stream.withColumn("words", F.split(F.col("text"), " "))
-        .withColumn("shingles", F.expr(_SHINGLES_EXPR))
-        .join(
-            F.broadcast(bitmap.withColumn("__one", F.lit(1))),
-            F.lit(1) == F.col("__one"),
+    def counters(stream: DataFrame) -> DataFrame:
+        flags = (
+            stream.withColumn("words", F.split(F.col("text"), " "))
+            .withColumn("shingles", F.expr(_SHINGLES_EXPR))
+            .join(
+                F.broadcast(bitmap.withColumn("__one", F.lit(1))),
+                F.lit(1) == F.col("__one"),
+            )
+            # coalesce the verdict to false: the shingle expr short-circuits
+            # under-length docs to array() (exists() then yields false, not
+            # NULL), but the stateful counter's int(sum) and the non-nullable
+            # output schema must not depend on that short-circuit surviving
+            # a refactor. lang is non-null by the documents fixture contract
+            # (a null lang group key would violate DECONTAM_OUT_SCHEMA and
+            # diverge from the oracle's GROUP BY — precondition, not guard).
+            .withColumn(
+                "contaminated",
+                F.coalesce(F.expr(decontam_probe_expr(m)), F.lit(False)),
+            )
+            .select("lang", "contaminated")
         )
-        # coalesce the verdict to false: the shingle expr short-circuits
-        # under-length docs to array() (exists() then yields false, not
-        # NULL), but the stateful counter's int(sum) and the non-nullable
-        # output schema must not depend on that short-circuit surviving a
-        # refactor. lang is non-null by the documents fixture contract
-        # (a null lang group key would violate DECONTAM_OUT_SCHEMA and
-        # diverge from the oracle's GROUP BY — precondition, not guard).
-        .withColumn(
-            "contaminated",
-            F.coalesce(F.expr(decontam_probe_expr(m)), F.lit(False)),
+        # Exact integer SUMS per lang — associative — so the state runs
+        # as a JVM-native streaming aggregation (state store still carries
+        # batch-1 counts into batch 2); round 10 removed the
+        # applyInPandasWithState Python round-trip per guide §4.1.
+        return flags.groupBy("lang").agg(
+            F.count("*").cast("long").alias("n_train"),
+            F.sum(F.when(F.col("contaminated"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_contaminated"),
         )
-        .select("lang", "contaminated")
-    )
-    # Exact integer SUMS per lang — associative — so the state runs as
-    # a JVM-native streaming aggregation (state store still carries
-    # batch-1 counts into batch 2); round 10 removed the
-    # applyInPandasWithState Python round-trip per guide §4.1.
-    counters = flags.groupBy("lang").agg(
-        F.count("*").cast("long").alias("n_train"),
-        F.sum(F.when(F.col("contaminated"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_contaminated"),
-    )
-    sink = f"decontam_gate_{abs(hash(workdir)) % 10**9}"
-    query = None
-    try:
-        early.coalesce(1).write.mode("append").parquet(in_dir)
-        query = (
-            counters.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.processAllAvailable()
-        late.coalesce(1).write.mode("append").parquet(in_dir)
-        query.processAllAvailable()
-        from pyspark.sql.window import Window
 
-        updates = spark.table(sink)
-        w = Window.partitionBy("lang").orderBy(F.col("n_train").desc())
-        final = (
-            updates.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-            .localCheckpoint(eager=True)
-        )
-        return final
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
+    with FileStream(spark) as fs:
+        updates = fs.run([early, late], "update", counters)
+        return latest_per_key(
+            updates, ["lang"], [F.col("n_train").desc()]
+        ).localCheckpoint(eager=True)

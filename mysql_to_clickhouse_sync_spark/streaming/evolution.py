@@ -12,9 +12,9 @@ NULL in the new column, and the final state is exact.
 The TARGET side of the same drift is sinks/ddl.py `alter_table_ddl`:
 an old-vs-new StructType diff rendered as idempotent `ALTER TABLE …
 ADD COLUMN IF NOT EXISTS` / safe `MODIFY COLUMN` ClickHouse DDL.
-s_cdc_schema_drift emits and logs those statements at the moment the
-wide generation appears, so a live sink would widen the table before
-the first post-ALTER insert (execution needs a live ClickHouse, which
+s_cdc_schema_drift emits and logs those statements before the stream
+starts, so a live sink would widen the table before the first post-ALTER
+insert (execution needs a live ClickHouse, which
 this sandbox lacks — the statements are generated and unit-tested,
 never faked).
 
@@ -28,9 +28,6 @@ column populated iff the winning row post-dates the ALTER).
 from __future__ import annotations
 
 import logging
-import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,6 +46,7 @@ from mysql_to_clickhouse_sync_spark.streaming.cdc import (
     as_state,
     live_rows,
 )
+from mysql_to_clickhouse_sync_spark.streaming.driver import FileStream
 from mysql_to_clickhouse_sync_spark.streaming.tuning import tuned
 
 _LOG = logging.getLogger(__name__)
@@ -84,11 +82,6 @@ def s_cdc_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 = events.filter(F.col("ts") >= F.lit(ALTER_TS))
     wide_schema = events.select(*_V2_COLS).schema
 
-    workdir = tempfile.mkdtemp(prefix="cdc_drift_")
-    in_dir = os.path.join(workdir, "in")
-    ckpt = os.path.join(workdir, "ckpt")
-    os.makedirs(in_dir)
-
     state = {"df": as_state(spark.createDataFrame([], wide_schema))}
 
     def merge(batch_df: DataFrame, _epoch: int) -> None:
@@ -99,41 +92,27 @@ def s_cdc_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             version_cols=["ts", "event_id"],
         ).localCheckpoint(eager=True)
 
-    query = None
-    try:
-        # generation 1 on the wire WITHOUT props (pre-ALTER serializer)
-        to_debezium_envelopes(
-            v1.select(*_V1_COLS), _V1_COLS, F.lit(False)
-        ).coalesce(1).write.mode("append").text(in_dir)
-        stream = (
-            parse_debezium(
-                spark.readStream.format("text")
-                .option("maxFilesPerTrigger", "1")
-                .load(in_dir),
-                wide_schema,
-            )
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
+    # The ALTER's target-side half: the idempotent ClickHouse DDL that
+    # widens the sink table (logged here; a live deployment would execute
+    # it before the first post-ALTER insert).
+    for stmt in alter_table_ddl(
+        events.select(*_V1_COLS).schema,
+        wide_schema,
+        "events_cdc",
+        order_by=("user_id",),  # the CDC merge key = CH ORDER BY key
+    ):
+        _LOG.info("schema drift DDL: %s", stmt)
+    # generation 1 on the wire WITHOUT props (pre-ALTER serializer), then
+    # generation 2 carrying the new column
+    generations = [
+        to_debezium_envelopes(v1.select(*_V1_COLS), _V1_COLS, F.lit(False)),
+        to_debezium_envelopes(v2.select(*_V2_COLS), _V2_COLS, F.lit(False)),
+    ]
+    with FileStream(spark) as fs:
+        fs.run(
+            generations,
+            merge,
+            lambda raw: parse_debezium(raw, wide_schema),
+            fmt="text",
         )
-        query = stream.start()
-        query.processAllAvailable()
-        # The ALTER lands. Target-side half first: emit the idempotent
-        # ClickHouse DDL that widens the sink table (logged here; a
-        # live deployment would execute it before the next insert).
-        for stmt in alter_table_ddl(
-            events.select(*_V1_COLS).schema,
-            wide_schema,
-            "events_cdc",
-            order_by=("user_id",),  # the CDC merge key = CH ORDER BY key
-        ):
-            _LOG.info("schema drift DDL: %s", stmt)
-        # generation 2 carries the new column
-        to_debezium_envelopes(
-            v2.select(*_V2_COLS), _V2_COLS, F.lit(False)
-        ).coalesce(1).write.mode("append").text(in_dir)
-        query.processAllAvailable()
-        return live_rows(state["df"]).select(*_V2_COLS)
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
+    return live_rows(state["df"]).select(*_V2_COLS)

@@ -16,21 +16,17 @@ deterministically and both carrying FULL DuckDB oracles:
     production; eviction then bounds state by (rate x delay), which is the
     entire point of the operator at 100 TB/day.
 
-Determinism: micro-batch boundaries forced file-by-file (write, then
-processAllAvailable), as in declared.py.
+Determinism: one micro-batch per slice, forced by streaming/driver.py.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mysql_to_clickhouse_sync_spark.catalog import EVENTS_US_CTE, load_table
 from mysql_to_clickhouse_sync_spark.registry import declare
+from mysql_to_clickhouse_sync_spark.streaming.driver import FileStream
 from mysql_to_clickhouse_sync_spark.streaming.tuning import tuned
 
 SPLIT_TS = "2024-01-20 00:00:00"  # same micro-batch split as declared.py
@@ -66,43 +62,24 @@ def s_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     early = events.filter(F.col("ts") < F.lit(SPLIT_TS))
     late = events.filter(F.col("ts") >= F.lit(SPLIT_TS))
 
-    workdir = tempfile.mkdtemp(prefix="stream_static_")
-    in_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
-    agg = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-        .join(F.broadcast(customer), F.col("user_id") == F.col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("decimal(18,2)")
-            .cast("double")
-            .alias("sum_value"),
+    def enriched(stream: DataFrame) -> DataFrame:
+        return (
+            stream.join(
+                F.broadcast(customer), F.col("user_id") == F.col("c_custkey")
+            )
+            .groupBy("c_mktsegment")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.sum(F.col("value").cast("decimal(18,6)"))
+                .cast("decimal(18,2)")
+                .cast("double")
+                .alias("sum_value"),
+            )
         )
-    )
-    sink = f"stream_static_{abs(hash(workdir)) % 10**9}"
-    query = None
-    try:
-        early.coalesce(1).write.mode("append").parquet(in_dir)
-        query = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.processAllAvailable()
-        late.coalesce(1).write.mode("append").parquet(in_dir)
-        query.processAllAvailable()
-        return spark.table(sink).localCheckpoint(eager=True)
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
+
+    with FileStream(spark) as fs:
+        out = fs.run([early, late], "complete", enriched)
+        return out.localCheckpoint(eager=True)
 
 
 @declare(
@@ -138,64 +115,40 @@ def s_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     early = events.filter(F.col("ts") < F.lit(SPLIT_TS))
     late = events.filter(F.col("ts") >= F.lit(SPLIT_TS))
 
-    workdir = tempfile.mkdtemp(prefix="stream_stream_")
-    in_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
+    def attributed(stream: DataFrame) -> DataFrame:
+        # Two readers on the one feed: the run's own, and a second one.
+        clicks = (
+            stream.filter(F.col("event_type") == "click")
+            .select(
+                F.col("event_id").alias("click_id"),
+                F.col("user_id"),
+                F.col("ts").alias("click_ts"),
+            )
+            .withWatermark("click_ts", _WATERMARK)
+        )
+        purchases = (
+            fs.reader()
+            .filter(F.col("event_type") == "purchase")
+            .select(
+                F.col("event_id").alias("purchase_id"),
+                F.col("user_id").alias("p_user_id"),
+                F.col("ts").alias("purchase_ts"),
+            )
+            .withWatermark("purchase_ts", _WATERMARK)
+        )
+        return clicks.join(
+            purchases,
+            (F.col("user_id") == F.col("p_user_id"))
+            & (F.col("purchase_ts") >= F.col("click_ts"))
+            & (
+                F.col("purchase_ts")
+                <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")
+            ),
+        ).select("user_id", "click_id", "purchase_id", "click_ts", "purchase_ts")
 
-    def _source() -> DataFrame:
-        return (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-
-    clicks = (
-        _source()
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", _WATERMARK)
-    )
-    purchases = (
-        _source()
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", _WATERMARK)
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-    ).select("user_id", "click_id", "purchase_id", "click_ts", "purchase_ts")
-
-    sink = f"stream_stream_{abs(hash(workdir)) % 10**9}"
-    query = None
-    try:
-        early.coalesce(1).write.mode("append").parquet(in_dir)
-        query = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.processAllAvailable()
-        late.coalesce(1).write.mode("append").parquet(in_dir)
-        query.processAllAvailable()
-        return spark.table(sink).localCheckpoint(eager=True)
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
+    with FileStream(spark) as fs:
+        out = fs.run([early, late], "append", attributed)
+        return out.localCheckpoint(eager=True)
 
 
 @declare(
@@ -233,38 +186,15 @@ def s_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     early = feed.filter(F.col("ts") < F.lit(SPLIT_TS))
     late = feed.filter(F.col("ts") >= F.lit(SPLIT_TS))
 
-    workdir = tempfile.mkdtemp(prefix="stream_dedup_")
-    in_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
-    deduped = (
-        spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-        .withWatermark("ts", _WATERMARK)
-        .dropDuplicatesWithinWatermark(["event_id"])
-        .select("event_id", "user_id", "event_type")
-    )
-    sink = f"stream_dedup_{abs(hash(workdir)) % 10**9}"
-    query = None
-    try:
-        early.coalesce(1).write.mode("append").parquet(in_dir)
-        query = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.processAllAvailable()
-        late.coalesce(1).write.mode("append").parquet(in_dir)
-        query.processAllAvailable()
-        out = spark.table(sink).localCheckpoint(eager=True)
-        n_copies = (
-            F.when(F.col("event_id") % 3 == 0, F.lit(2)).otherwise(F.lit(1))
-        ).cast("long")
-        return out.withColumn("n_copies_seen", n_copies)
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
+    with FileStream(spark) as fs:
+        out = fs.run(
+            [early, late],
+            "append",
+            lambda s: s.withWatermark("ts", _WATERMARK)
+            .dropDuplicatesWithinWatermark(["event_id"])
+            .select("event_id", "user_id", "event_type"),
+        ).localCheckpoint(eager=True)
+    n_copies = (
+        F.when(F.col("event_id") % 3 == 0, F.lit(2)).otherwise(F.lit(1))
+    ).cast("long")
+    return out.withColumn("n_copies_seen", n_copies)

@@ -21,10 +21,6 @@ commit itself is O(1) filesystem metadata regardless of data size.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,7 +29,7 @@ from mysql_to_clickhouse_sync_spark.catalog import (
     load_table,
 )
 from mysql_to_clickhouse_sync_spark.registry import declare
-from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable
+from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable, expect
 from mysql_to_clickhouse_sync_spark.streaming.cdc import (
     DELETE as DELETE_OP,
     OP_COL,
@@ -47,6 +43,7 @@ from mysql_to_clickhouse_sync_spark.streaming.declared import (
     SPLIT_TS,
     _changelog_from_events,
 )
+from mysql_to_clickhouse_sync_spark.streaming.driver import FileStream
 from mysql_to_clickhouse_sync_spark.streaming.tuning import tuned
 
 
@@ -75,40 +72,20 @@ def s_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(N_STREAM_FILES)
     ]
 
-    workdir = tempfile.mkdtemp(prefix="lake_cdc_")
-    in_dir = f"{workdir}/changelog"
-    ckpt = f"{workdir}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
-    table = LakeTable(
-        spark,
-        f"{workdir}/state",
-        keys=["user_id"],
-        version_cols=["ts", "event_id"],
-        retention=N_STREAM_FILES,
-    )
-    table.merge(snapshot)  # version 0: the reference's bulk copy
-
-    query = None
-    try:
-        stream = (
-            spark.readStream.schema(changelog.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-            .writeStream.foreachBatch(table.writer())
-            .option("checkpointLocation", ckpt)
+    with FileStream(spark) as fs:
+        table = LakeTable(
+            spark,
+            f"{fs.workdir}/state",
+            keys=["user_id"],
+            version_cols=["ts", "event_id"],
+            retention=N_STREAM_FILES,
         )
-        query = stream.start()
-        for part in slices:
-            part.coalesce(1).write.mode("append").parquet(in_dir)
-            query.processAllAvailable()
+        table.merge(snapshot)  # version 0: the reference's bulk copy
+        fs.run(slices, table.writer())
         # one commit per micro-batch landed, watermark at the last batch
-        assert table.current_version() == N_STREAM_FILES
-        assert table.last_batch() == N_STREAM_FILES - 1
+        expect("lake version", N_STREAM_FILES, table.current_version())
+        expect("batch watermark", N_STREAM_FILES - 1, table.last_batch())
         return table.read().localCheckpoint(eager=True)
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 @declare("s_lake_merge_dv", oracle=_CDC_APPLY_ORACLE, tier="P3")
@@ -153,34 +130,20 @@ def s_lake_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         ups.filter(F.col("event_id") % 2 == 1),
     ]
 
-    workdir = tempfile.mkdtemp(prefix="lake_cdc_dv_")
-    in_dir = f"{workdir}/changelog"
-    ckpt = f"{workdir}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
-    table = LakeTable(
-        spark,
-        f"{workdir}/state",
-        keys=["user_id"],
-        version_cols=["ts", "event_id"],
-        retention=len(slices),
-    )
-    table.merge(snapshot)  # version 0: the reference's bulk copy
-
-    query = None
-    try:
-        stream = (
-            spark.readStream.schema(changelog.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-            .writeStream.foreachBatch(table.writer(dv_deletes=True))
-            .option("checkpointLocation", ckpt)
+    with FileStream(spark) as fs:
+        # retention = #slices keeps versions 1..3 for the routing check
+        table = LakeTable(
+            spark,
+            f"{fs.workdir}/state",
+            keys=["user_id"],
+            version_cols=["ts", "event_id"],
+            retention=len(slices),
         )
-        query = stream.start()
-        ops = []
-        for part in slices:
-            part.coalesce(1).write.mode("append").parquet(in_dir)
-            query.processAllAvailable()
-            ops.append(table.manifest(table.current_version())["operation"])
+        table.merge(snapshot)  # version 0: the reference's bulk copy
+        fs.run(slices, table.writer(dv_deletes=True))
+        ops = [
+            table.manifest(v)["operation"] for v in range(1, len(slices) + 1)
+        ]
         if ops != ["merge", "delete-vector", "merge"]:
             raise ValueError(
                 f"dv routing did not take the expected paths: {ops}"
@@ -188,10 +151,6 @@ def s_lake_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         if table.manifest(table.current_version()).get("dv"):
             raise ValueError("the post-delete merge must fold the vectors")
         return table.read().localCheckpoint(eager=True)
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 EVOLVE_SPLIT = "2024-01-21 00:00:00"  # the upstream ALTER lands here
@@ -241,58 +200,45 @@ def s_lake_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_slices = 2  # micro-batches per wire generation
 
-    workdir = tempfile.mkdtemp(prefix="lake_evolve_s_")
-    table = LakeTable(
-        spark,
-        f"{workdir}/state",
-        keys=["user_id"],
-        version_cols=["ts", "event_id"],
-        retention=2 * n_slices,
-    )
+    def sliced(gen_df: DataFrame) -> list[DataFrame]:
+        return [
+            gen_df.filter(F.col("event_id") % n_slices == i)
+            for i in range(n_slices)
+        ]
 
-    def run_generation(gen_df: DataFrame, tag: str, writer) -> None:
-        in_dir = f"{workdir}/in_{tag}"
-        os.makedirs(in_dir, exist_ok=True)
-        query = (
-            spark.readStream.schema(gen_df.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-            .writeStream.foreachBatch(writer)
-            .option("checkpointLocation", f"{workdir}/ckpt_{tag}")
-            .start()
+    with FileStream(spark) as fs:
+        table = LakeTable(
+            spark,
+            f"{fs.workdir}/state",
+            keys=["user_id"],
+            version_cols=["ts", "event_id"],
+            retention=2 * n_slices,
         )
-        try:
-            for i in range(n_slices):
-                gen_df.filter(
-                    F.col("event_id") % n_slices == i
-                ).coalesce(1).write.mode("append").parquet(in_dir)
-                query.processAllAvailable()
-        finally:
-            query.stop()
-
-    try:
-        run_generation(narrow, "narrow", table.writer())
+        fs.run(sliced(narrow), table.writer())
         pre_drift_version = table.current_version()
-        assert table.manifest(pre_drift_version)["schema_version"] == 0
+        expect(
+            "pre-drift schema_version",
+            0,
+            table.manifest(pre_drift_version)["schema_version"],
+        )
         # the ALTER lands; the connector restarts with the wide schema.
         # Batch ids restart at 0 in the new checkpoint — offset them by
         # the committed watermark so exactly-once survives the restart.
         base = table.last_batch() + 1
-        run_generation(
-            wide,
-            "wide",
+        fs.run(
+            sliced(wide),
             lambda df, bid: table.merge(df, batch_id=bid + base),
         )
         m = table.manifest(table.current_version())
-        assert m["schema_version"] == 1
-        assert table.last_batch() == base + n_slices - 1
+        expect("post-drift schema_version", 1, m["schema_version"])
+        expect("batch watermark", base + n_slices - 1, table.last_batch())
         # time travel: the pre-drift version keeps its narrow schema
-        assert "event_type" not in table.read(
-            version=pre_drift_version
-        ).columns
+        expect(
+            "event_type in the pre-drift version",
+            False,
+            "event_type" in table.read(version=pre_drift_version).columns,
+        )
         return table.read().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # -- streaming incremental ANN (round 8) ----------------------------------
@@ -343,50 +289,36 @@ def s_ann_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = "vec_id long, centroid_id long, rn long"
     arrivals = base.filter(~train_pred)
 
-    workdir = tempfile.mkdtemp(prefix="ann_stream_")
-    in_dir = f"{workdir}/arrivals"
-    os.makedirs(in_dir, exist_ok=True)
-    table = LakeTable(
-        spark,
-        f"{workdir}/ivf_index",
-        keys=["vec_id", "rn"],
-        version_cols=["centroid_id"],
-        retention=ANN_STREAM_SLICES + 1,
-    )
-    # version 0: the prefix index (the "already-ingested" corpus)
-    table.merge(
-        cbase.mapInPandas(ranker, schema).withColumn(OP_COL, F.lit(UPSERT))
-    )
+    slices = [
+        arrivals.filter(
+            F.expr(f"(vec_id div {INC_TRAIN_MOD}) % {ANN_STREAM_SLICES}") == i
+        )
+        for i in range(ANN_STREAM_SLICES)
+    ]
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        ranked = batch_df.mapInPandas(ranker, schema)
-        table.merge_with_retry(
-            ranked.withColumn(OP_COL, F.lit(UPSERT)), batch_id=batch_id
+    with FileStream(spark) as fs:
+        table = LakeTable(
+            spark,
+            f"{fs.workdir}/ivf_index",
+            keys=["vec_id", "rn"],
+            version_cols=["centroid_id"],
+            retention=ANN_STREAM_SLICES + 1,
+        )
+        # version 0: the prefix index (the "already-ingested" corpus)
+        table.merge(
+            cbase.mapInPandas(ranker, schema).withColumn(OP_COL, F.lit(UPSERT))
         )
 
-    query = None
-    try:
-        query = (
-            spark.readStream.schema(arrivals.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-            .writeStream.foreachBatch(land)
-            .option("checkpointLocation", f"{workdir}/ckpt")
-            .start()
-        )
-        for i in range(ANN_STREAM_SLICES):
-            arrivals.filter(
-                F.expr(f"(vec_id div {INC_TRAIN_MOD}) % {ANN_STREAM_SLICES}")
-                == i
-            ).coalesce(1).write.mode("append").parquet(in_dir)
-            query.processAllAvailable()
-        assert table.current_version() == ANN_STREAM_SLICES
-        assert table.last_batch() == ANN_STREAM_SLICES - 1
+        def land(batch_df: DataFrame, batch_id: int) -> None:
+            ranked = batch_df.mapInPandas(ranker, schema)
+            table.merge_with_retry(
+                ranked.withColumn(OP_COL, F.lit(UPSERT)), batch_id=batch_id
+            )
+
+        fs.run(slices, land)
+        expect("lake version", ANN_STREAM_SLICES, table.current_version())
+        expect("batch watermark", ANN_STREAM_SLICES - 1, table.last_batch())
         persisted = live_rows(table.raw()).select(
             "vec_id", "centroid_id", "rn"
         )
         return _bulk_score(base, persisted).localCheckpoint(eager=True)
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)

@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +39,7 @@ from mysql_to_clickhouse_sync_spark.operators.clickhouse import (
     _cents,
 )
 from mysql_to_clickhouse_sync_spark.registry import declare
+from mysql_to_clickhouse_sync_spark.streaming.driver import FileStream
 from mysql_to_clickhouse_sync_spark.streaming.tuning import tuned
 
 SPLIT_TS = "2024-01-20 00:00:00"  # same micro-batch split as declared.py
@@ -176,31 +176,10 @@ def s_agg_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     early = events.filter(F.col("ts") < F.lit(SPLIT_TS))
     late = events.filter(F.col("ts") >= F.lit(SPLIT_TS))
 
-    workdir = tempfile.mkdtemp(prefix="matview_")
-    in_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
-    sink = StateSink(spark, f"{workdir}/state")
-
-    query = None
-    try:
-        early.coalesce(1).write.mode("append").parquet(in_dir)
-        query = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-            .writeStream.foreachBatch(sink.apply)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.processAllAvailable()
-        late.coalesce(1).write.mode("append").parquet(in_dir)
-        query.processAllAvailable()
+    with FileStream(spark) as fs:
+        sink = StateSink(spark, f"{fs.workdir}/state")
+        fs.run([early, late], sink.apply)
         return sink.readout().localCheckpoint(eager=True)
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # -- retraction-capable streaming materialized view -------------------------
@@ -454,35 +433,7 @@ def s_mv_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     defining property that makes a continuously-maintained view cheaper
     than periodic full refresh, now with the reference's delete semantics
     (binlog DELETE, S:97-116) instead of append-only."""
-    from mysql_to_clickhouse_sync_spark.streaming.staging import (
-        stage_batch_files,
-    )
-
-    batches = mv_stream_batches(spark, sf_dir)
-    schema = batches[0].schema
-
-    workdir = tempfile.mkdtemp(prefix="mv_stream_")
-    in_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
-    sink = MvDeltaSink(spark, workdir)
-
-    query = None
-    try:
-        staged = stage_batch_files(batches, workdir)
-        query = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-            .writeStream.foreachBatch(sink.apply)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        for i, path in enumerate(staged):
-            os.rename(path, os.path.join(in_dir, f"batch-{i}.parquet"))
-            query.processAllAvailable()
+    with FileStream(spark) as fs:
+        sink = MvDeltaSink(spark, fs.workdir)
+        fs.run(mv_stream_batches(spark, sf_dir), sink.apply)
         return sink.readout().localCheckpoint(eager=True)
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)

@@ -18,8 +18,6 @@ in tests and pinned by each query's full DuckDB oracle."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from collections.abc import Iterator
 from typing import TYPE_CHECKING, Any
 
@@ -27,19 +25,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 from mysql_to_clickhouse_sync_spark.catalog import EVENTS_US_CTE, load_table
 from mysql_to_clickhouse_sync_spark.registry import declare
-from mysql_to_clickhouse_sync_spark.streaming.tuning import tuned
 from mysql_to_clickhouse_sync_spark.shipping import ensure_package_shipped
+from mysql_to_clickhouse_sync_spark.streaming.cdc import latest_per_key
+from mysql_to_clickhouse_sync_spark.streaming.driver import FileStream
+from mysql_to_clickhouse_sync_spark.streaming.tuning import tuned
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -82,59 +79,26 @@ def s_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     early = events.filter(F.col("ts") < F.lit("2024-01-20 00:00:00"))
     late = events.filter(F.col("ts") >= F.lit("2024-01-20 00:00:00"))
 
-    workdir = tempfile.mkdtemp(prefix="stateful_")
-    in_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    import os
-
-    os.makedirs(in_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
     # count/sum/max are associative, so the profile runs as a JVM
     # streaming aggregation (guide §4.1; see module docstring). The
     # cents rounding is tie-free on this data (docstring above), so
     # Spark HALF_UP lands on the same integers the oracle's round does.
-    out = stream.groupBy("user_id").agg(
-        F.count("*").cast("long").alias("n_events"),
-        F.sum(F.round(F.col("value") * 100).cast("long"))
-        .cast("long")
-        .alias("sum_value_cents"),
-        F.max("ts").alias("last_ts"),
-    )
-    sink = f"profiles_{abs(hash(workdir)) % 10**9}"
-    query = None
-    try:
-        early.coalesce(1).write.mode("append").parquet(in_dir)
-        query = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
+    def profile(stream: DataFrame) -> DataFrame:
+        return stream.groupBy("user_id").agg(
+            F.count("*").cast("long").alias("n_events"),
+            F.sum(F.round(F.col("value") * 100).cast("long"))
+            .cast("long")
+            .alias("sum_value_cents"),
+            F.max("ts").alias("last_ts"),
         )
-        query.processAllAvailable()
-        late.coalesce(1).write.mode("append").parquet(in_dir)
-        query.processAllAvailable()
+
+    with FileStream(spark) as fs:
+        updates = fs.run([early, late], "update", profile)
         # The memory sink accumulates one row per (user, update); keep the
         # final state per user = the row with the max n_events.
-        from pyspark.sql.window import Window
-
-        all_updates = spark.table(sink)
-        w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-        final = (
-            all_updates.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-            .localCheckpoint(eager=True)
-        )
-        return final
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
+        return latest_per_key(
+            updates, ["user_id"], [F.col("n_events").desc()]
+        ).localCheckpoint(eager=True)
 
 
 # --- Streaming near-dup admission (MinHash-LSH bucket state) ----------------
@@ -212,10 +176,9 @@ def s_minhash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # Materialize the banding ONCE (parallel): the per-wave writes below
-    # coalesce to one file each, and without the checkpoint each wave
-    # re-ran the whole signature/banding computation INSIDE its single
-    # coalesced task (round 10, guide §1.3/§2.1).
+    # Materialize the banding ONCE: the staging job and the admission
+    # readout both read it, and without the checkpoint each re-runs the
+    # whole signature/banding computation (round 10, guide §1.3/§2.1).
     bands = (
         minhash_band_table(minhash_signatures_table(docs))
         .select(
@@ -231,38 +194,18 @@ def s_minhash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     early = bands.filter(F.col("doc_id") <= split)
     late = bands.filter(F.col("doc_id") > split)
 
-    workdir = tempfile.mkdtemp(prefix="minhash_stream_")
-    in_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    import os
-
-    os.makedirs(in_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(bands.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    owners = stream.groupBy("band_idx", "bucket").agg(
-        F.min("doc_id").alias("owner")
-    )
-    sink = f"minhash_admit_{abs(hash(workdir)) % 10**9}"
-    query = None
-    try:
-        early.coalesce(1).write.mode("append").parquet(in_dir)
-        query = (
-            owners.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
+    with FileStream(spark) as fs:
+        owners = fs.run(
+            [early, late],
+            "update",
+            lambda s: s.groupBy("band_idx", "bucket").agg(
+                F.min("doc_id").alias("owner")
+            ),
         )
-        query.processAllAvailable()
-        late.coalesce(1).write.mode("append").parquet(in_dir)
-        query.processAllAvailable()
-        converged = spark.table(sink).groupBy("band_idx", "bucket").agg(
+        converged = owners.groupBy("band_idx", "bucket").agg(
             F.min("owner").alias("owner")
         )
-        final = (
+        return (
             bands.join(converged, ["band_idx", "bucket"])
             .groupBy("doc_id")
             .agg(
@@ -278,11 +221,6 @@ def s_minhash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-        return final
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # --- Streaming learned quality gate (per-lang admission counters) -----------
@@ -339,61 +277,29 @@ def s_quality_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     early = docs.filter(F.col("doc_id") <= split)
     late = docs.filter(F.col("doc_id") > split)
 
-    workdir = tempfile.mkdtemp(prefix="quality_stream_")
-    in_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    import os
-
-    os.makedirs(in_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    scored = logistic_scored(stream).select("lang", "p_milli", "keep")
     # The counters are exact integer SUMS — associative — so they run
     # as a JVM-native streaming aggregation (state store still carries
     # batch-1 counts into batch 2); round 10 removed the
     # applyInPandasWithState Python round-trip per guide §4.1.
-    counters = scored.groupBy("lang").agg(
-        F.count("*").cast("long").alias("n_seen"),
-        F.sum(F.when(F.col("keep"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_kept"),
-        F.sum("p_milli").cast("long").alias("sum_p_milli"),
-    )
-    sink = f"quality_gate_{abs(hash(workdir)) % 10**9}"
-    query = None
-    try:
-        early.coalesce(1).write.mode("append").parquet(in_dir)
-        query = (
-            counters.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
+    def counters(stream: DataFrame) -> DataFrame:
+        scored = logistic_scored(stream).select("lang", "p_milli", "keep")
+        return scored.groupBy("lang").agg(
+            F.count("*").cast("long").alias("n_seen"),
+            F.sum(F.when(F.col("keep"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_kept"),
+            F.sum("p_milli").cast("long").alias("sum_p_milli"),
         )
-        query.processAllAvailable()
-        late.coalesce(1).write.mode("append").parquet(in_dir)
-        query.processAllAvailable()
-        from pyspark.sql.window import Window
 
-        updates = spark.table(sink)
-        w = Window.partitionBy("lang").orderBy(F.col("n_seen").desc())
-        final = (
-            updates.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
+    with FileStream(spark) as fs:
+        updates = fs.run([early, late], "update", counters)
+        return (
+            latest_per_key(updates, ["lang"], [F.col("n_seen").desc()])
             .withColumn(
                 "kept_ratio_milli", F.expr("n_kept * 1000 div n_seen")
             )
             .localCheckpoint(eager=True)
         )
-        return final
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # --- s_holt_stream -----------------------------------------------------------
@@ -502,53 +408,22 @@ def s_holt_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     early = ser.filter(F.col("day_n") <= split)
     late = ser.filter(F.col("day_n") > split)
 
-    workdir = tempfile.mkdtemp(prefix="holt_stream_")
-    in_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    import os
-
-    os.makedirs(in_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(ser.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
     ensure_package_shipped(spark)
-    states = stream.groupBy("event_type").applyInPandasWithState(
-        update_holt_state,
-        outputStructType=HOLT_OUT_SCHEMA,
-        stateStructType=HOLT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = f"holt_stream_{abs(hash(workdir)) % 10**9}"
-    query = None
-    try:
-        early.coalesce(1).write.mode("append").parquet(in_dir)
-        query = (
-            states.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
+    with FileStream(spark) as fs:
+        updates = fs.run(
+            [early, late],
+            "update",
+            lambda s: s.groupBy("event_type").applyInPandasWithState(
+                update_holt_state,
+                outputStructType=HOLT_OUT_SCHEMA,
+                stateStructType=HOLT_STATE_SCHEMA,
+                outputMode="update",
+                timeoutConf=GroupStateTimeout.NoTimeout,
+            ),
         )
-        query.processAllAvailable()
-        late.coalesce(1).write.mode("append").parquet(in_dir)
-        query.processAllAvailable()
-        from pyspark.sql.window import Window
-
-        updates = spark.table(sink)
-        w = Window.partitionBy("event_type").orderBy(F.col("n_days").desc())
-        return (
-            updates.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
+        return latest_per_key(
+            updates, ["event_type"], [F.col("n_days").desc()]
+        ).localCheckpoint(eager=True)
 
 
 # --- s_drift_stream ----------------------------------------------------------
@@ -610,60 +485,31 @@ def s_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.filter(F.col("doc_id") % 2 == 0)
     cur = docs.filter(F.col("doc_id") % 2 == 1)
 
-    workdir = tempfile.mkdtemp(prefix="drift_stream_")
-    in_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    import os
-
-    os.makedirs(in_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    binned = logistic_scored(stream).select(
-        F.expr("least(p_milli div 100, 9)").alias("bin"),
-        F.expr("CAST(doc_id % 2 = 0 AS BOOLEAN)").alias("is_base"),
-    )
     # Exact integer SUMS per bin — associative — so the state runs as a
     # JVM-native streaming aggregation (state store still carries
     # batch-1 counts into batch 2); round 10 removed the
     # applyInPandasWithState Python round-trip per guide §4.1.
     # diff_micro is filled by the finalizer against the converged
     # totals, exactly as the pandas handler left it.
-    counters = binned.groupBy("bin").agg(
-        F.sum(F.when(F.col("is_base"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_base"),
-        F.sum(F.when(F.col("is_base"), 0).otherwise(1))
-        .cast("long")
-        .alias("n_cur"),
-    ).withColumn("diff_micro", F.lit(0).cast("long"))
-    sink = f"drift_stream_{abs(hash(workdir)) % 10**9}"
-    query = None
-    try:
-        base.coalesce(1).write.mode("append").parquet(in_dir)
-        query = (
-            counters.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
+    def counters(stream: DataFrame) -> DataFrame:
+        binned = logistic_scored(stream).select(
+            F.expr("least(p_milli div 100, 9)").alias("bin"),
+            F.expr("CAST(doc_id % 2 = 0 AS BOOLEAN)").alias("is_base"),
         )
-        query.processAllAvailable()
-        cur.coalesce(1).write.mode("append").parquet(in_dir)
-        query.processAllAvailable()
-        from pyspark.sql.window import Window
+        return binned.groupBy("bin").agg(
+            F.sum(F.when(F.col("is_base"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_base"),
+            F.sum(F.when(F.col("is_base"), 0).otherwise(1))
+            .cast("long")
+            .alias("n_cur"),
+        ).withColumn("diff_micro", F.lit(0).cast("long"))
 
-        updates = spark.table(sink)
-        w = Window.partitionBy("bin").orderBy(
-            (F.col("n_base") + F.col("n_cur")).desc()
-        )
-        final = (
-            updates.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn", "diff_micro")
-        )
+    with FileStream(spark) as fs:
+        updates = fs.run([base, cur], "update", counters)
+        final = latest_per_key(
+            updates, ["bin"], [(F.col("n_base") + F.col("n_cur")).desc()]
+        ).drop("diff_micro")
         tot = final.agg(
             F.sum("n_base").cast("long").alias("ta"),
             F.sum("n_cur").cast("long").alias("tb"),
@@ -680,10 +526,6 @@ def s_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # --- s_funnel_stream ---------------------------------------------------------
@@ -865,47 +707,21 @@ def s_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("t") >= bounds[1]),
     ]
 
-    workdir = tempfile.mkdtemp(prefix="funnel_stream_")
-    in_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    import os
-
-    os.makedirs(in_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
     ensure_package_shipped(spark)
-    levels = stream.groupBy("user_id").applyInPandasWithState(
-        update_funnel,
-        outputStructType=FUNNEL_OUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = f"funnel_stream_{abs(hash(workdir)) % 10**9}"
-    query = None
-    try:
-        query = None
-        for part in slices:
-            part.coalesce(1).write.mode("append").parquet(in_dir)
-            if query is None:
-                query = (
-                    levels.writeStream.outputMode("update")
-                    .format("memory")
-                    .queryName(sink)
-                    .option("checkpointLocation", ckpt)
-                    .start()
-                )
-            query.processAllAvailable()
-        from pyspark.sql.window import Window
-
-        updates = spark.table(sink)
-        w = Window.partitionBy("user_id").orderBy(F.col("n_seen").desc())
-        final = (
-            updates.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
+    with FileStream(spark) as fs:
+        updates = fs.run(
+            slices,
+            "update",
+            lambda s: s.groupBy("user_id").applyInPandasWithState(
+                update_funnel,
+                outputStructType=FUNNEL_OUT_SCHEMA,
+                stateStructType=FUNNEL_STATE_SCHEMA,
+                outputMode="update",
+                timeoutConf=GroupStateTimeout.NoTimeout,
+            ),
+        )
+        return (
+            latest_per_key(updates, ["user_id"], [F.col("n_seen").desc()])
             .select(
                 "user_id",
                 "funnel_level",
@@ -915,8 +731,3 @@ def s_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-        return final
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)

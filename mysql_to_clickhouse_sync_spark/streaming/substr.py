@@ -48,10 +48,6 @@ positions; the group flip is O(members) JSON bytes.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,6 +62,7 @@ from mysql_to_clickhouse_sync_spark.sinks.merge import (
     LakeTable,
     LakeTableGroup,
 )
+from mysql_to_clickhouse_sync_spark.streaming.driver import FileStream
 from mysql_to_clickhouse_sync_spark.streaming.tuning import tuned
 
 N_SUBSTR_BATCHES = 2
@@ -224,33 +221,7 @@ def s_substring_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cites the reference's continuous-replication north star
     (mysql_to_clickhouse_sync.py main loop): the curation pass runs
     WHILE data lands, rather than as a nightly full rescan."""
-    from mysql_to_clickhouse_sync_spark.streaming.staging import (
-        stage_batch_files,
-    )
-
-    batches = substr_stream_batches(spark, sf_dir)
-    schema = batches[0].schema
-    workdir = tempfile.mkdtemp(prefix="substr_stream_")
-    in_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
-    sink = SubstrDedupSink(spark, workdir)
-    query = None
-    try:
-        staged = stage_batch_files(batches, workdir)
-        query = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-            .writeStream.foreachBatch(sink.apply)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        for i, path in enumerate(staged):
-            os.rename(path, os.path.join(in_dir, f"batch-{i}.parquet"))
-            query.processAllAvailable()
+    with FileStream(spark) as fs:
+        sink = SubstrDedupSink(spark, fs.workdir)
+        fs.run(substr_stream_batches(spark, sf_dir), sink.apply)
         return sink.readout().localCheckpoint(eager=True)
-    finally:
-        if query is not None:
-            query.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
