@@ -683,10 +683,7 @@ def q_ann_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     commits it bucketed by centroid_id so query-time cogroups read
     co-located lists. The rebuild-vs-reuse decision becomes a manifest
     version check (the LakeTable last_batch watermark), not a recompute."""
-    import shutil
-    import tempfile
-
-    from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable
+    from mysql_to_clickhouse_sync_spark.sinks.merge import scratch_table
     from mysql_to_clickhouse_sync_spark.streaming.cdc import (
         OP_COL,
         UPSERT,
@@ -694,15 +691,12 @@ def q_ann_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     base, ranked = _bulk_index(spark, sf_dir)
-    workdir = tempfile.mkdtemp(prefix="ann_index_")
-    try:
-        table = LakeTable(
-            spark,
-            f"{workdir}/ivf_index",
-            keys=["vec_id", "rn"],
-            version_cols=["centroid_id"],
-            retention=1,
-        )
+    with scratch_table(
+        spark,
+        keys=["vec_id", "rn"],
+        version_cols=["centroid_id"],
+        retention=1,
+    ) as table:
         table.merge(ranked.withColumn(OP_COL, F.lit(UPSERT)), batch_id=0)
         v = table.current_version()
         # re-read strictly through the committed version's manifest
@@ -710,8 +704,6 @@ def q_ann_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "centroid_id", "rn"
         )
         return _bulk_score(base, persisted).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 INC_TRAIN_MOD = 4  # vec_id % 4 != 3 is the training prefix (~75%)
@@ -743,10 +735,10 @@ def q_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus grows — the production policy is retrain-when-recall-drops,
     measurable here with q_ann_bulk_recall's panel against the same
     lists."""
-    import shutil
-    import tempfile
-
-    from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable, expect
+    from mysql_to_clickhouse_sync_spark.sinks.merge import (
+        expect,
+        scratch_table,
+    )
     from mysql_to_clickhouse_sync_spark.streaming.cdc import (
         OP_COL,
         UPSERT,
@@ -762,15 +754,12 @@ def q_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = "vec_id long, centroid_id long, rn long"
     ranked_prefix = cbase.mapInPandas(ranker, schema)
     ranked_new = base.filter(~train_pred).mapInPandas(ranker, schema)
-    workdir = tempfile.mkdtemp(prefix="ann_incr_")
-    try:
-        table = LakeTable(
-            spark,
-            f"{workdir}/ivf_index",
-            keys=["vec_id", "rn"],
-            version_cols=["centroid_id"],
-            retention=1,
-        )
+    with scratch_table(
+        spark,
+        keys=["vec_id", "rn"],
+        version_cols=["centroid_id"],
+        retention=1,
+    ) as table:
         table.merge(
             ranked_prefix.withColumn(OP_COL, F.lit(UPSERT)), batch_id=0
         )
@@ -782,8 +771,6 @@ def q_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "centroid_id", "rn"
         )
         return _bulk_score(base, persisted).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 @declare(

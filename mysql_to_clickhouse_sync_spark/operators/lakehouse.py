@@ -26,8 +26,6 @@ one version.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,7 +33,11 @@ from pyspark.sql import functions as F
 
 from mysql_to_clickhouse_sync_spark.catalog import EVENTS_US_CTE, load_table
 from mysql_to_clickhouse_sync_spark.registry import declare
-from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable, expect
+from mysql_to_clickhouse_sync_spark.sinks.merge import (
+    LakeTable,
+    expect,
+    scratch_table,
+)
 from mysql_to_clickhouse_sync_spark.streaming.cdc import (
     DELETE,
     OP_COL,
@@ -117,16 +119,13 @@ def _run_merge_commits(
 def _with_committed_table(spark, batches, n_buckets, reader, cols):
     """Commit `batches` into a scratch LakeTable, apply `reader` to get
     per-version frames, union, checkpoint, clean up."""
-    workdir = tempfile.mkdtemp(prefix="lake_snapshot_")
-    try:
-        table = LakeTable(
-            spark,
-            f"{workdir}/state",
-            keys=["user_id"],
-            version_cols=["ts", "event_id"],
-            retention=len(batches),  # keep every commit readable
-            n_buckets=n_buckets,
-        )
+    with scratch_table(
+        spark,
+        keys=["user_id"],
+        version_cols=["ts", "event_id"],
+        retention=len(batches),  # keep every commit readable
+        n_buckets=n_buckets,
+    ) as table:
         for i, b in enumerate(batches):
             table.merge(b, batch_id=i)
         expect("lake versions", [0, 1, 2], table.versions())
@@ -134,8 +133,6 @@ def _with_committed_table(spark, batches, n_buckets, reader, cols):
             lambda a, b: a.unionByName(b), reader(table)
         ).select(*cols)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 @declare("q_merge_snapshot", oracle=_ORACLE, tier="P2")
@@ -224,9 +221,6 @@ def q_lake_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(matching bands) files. This is the Delta/Iceberg file-skipping
     half the sink lacked (the bucketed layout prunes by key hash; this
     prunes by VALUE RANGE, the complementary axis)."""
-    import shutil
-    import tempfile
-
     from mysql_to_clickhouse_sync_spark.streaming.cdc import UPSERT as _UP
 
     ev = (
@@ -240,16 +234,13 @@ def q_lake_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     log = ev.withColumn(
         "band", F.expr(f"user_id div {width}")
     ).withColumn(OP_COL, F.lit(_UP))
-    workdir = tempfile.mkdtemp(prefix="lake_skip_")
-    try:
-        table = LakeTable(
-            spark,
-            f"{workdir}/state",
-            keys=["user_id"],
-            version_cols=["ts", "event_id"],
-            retention=0,
-            partition_files_by="band",
-        )
+    with scratch_table(
+        spark,
+        keys=["user_id"],
+        version_cols=["ts", "event_id"],
+        retention=0,
+        partition_files_by="band",
+    ) as table:
         table.merge(log, batch_id=0)
         pruned, total, nread = table.read_pruned(
             "user_id", SKIP_LO, SKIP_HI
@@ -265,8 +256,6 @@ def q_lake_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("files_read", F.lit(nread).cast("long"))
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # -- z-order (multi-column) data skipping -----------------------------------
@@ -343,9 +332,6 @@ def q_lake_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     count is fixed (64) so the layout is scale-stable — a production
     table raises ZBITS with data volume the same way SKIP_TARGET_FILES
     scales the 1-d band width."""
-    import shutil
-    import tempfile
-
     from mysql_to_clickhouse_sync_spark.streaming.cdc import (
         UPSERT as _UP,
         latest_per_key,
@@ -377,16 +363,13 @@ def q_lake_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ulo, uhi = umn + (umx - umn) // 8, umn + (umx - umn) // 3
     vlo, vhi = vmn + (vmx - vmn) // 8, vmn + (vmx - vmn) // 3
-    workdir = tempfile.mkdtemp(prefix="lake_zorder_")
-    try:
-        table = LakeTable(
-            spark,
-            f"{workdir}/state",
-            keys=["user_id"],
-            version_cols=["ts", "event_id"],
-            retention=0,
-            partition_files_by="zcell",
-        )
+    with scratch_table(
+        spark,
+        keys=["user_id"],
+        version_cols=["ts", "event_id"],
+        retention=0,
+        partition_files_by="zcell",
+    ) as table:
         table.merge(log, batch_id=0)
         pruned, total, nread = table.read_pruned_all(
             [("user_id", ulo, uhi), ("vc", vlo, vhi)]
@@ -401,8 +384,6 @@ def q_lake_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("files_read", F.lit(nread).cast("long"))
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # -- bloom-filter (membership) data skipping --------------------------------
@@ -508,9 +489,6 @@ def q_lake_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     thread-pooled; production folds it into the writer. String columns
     — which have NO pruning-safe footer stats at all — get the same
     treatment for free."""
-    import shutil
-    import tempfile
-
     from mysql_to_clickhouse_sync_spark.streaming.cdc import UPSERT as _UP
 
     ev = (
@@ -535,17 +513,14 @@ def q_lake_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     log = ev.withColumn(
         "band", F.expr(f"event_id div {width}")
     ).withColumn(OP_COL, F.lit(_UP))
-    workdir = tempfile.mkdtemp(prefix="lake_bloom_")
-    try:
-        table = LakeTable(
-            spark,
-            f"{workdir}/state",
-            keys=["event_id"],
-            version_cols=["ts"],
-            retention=0,
-            partition_files_by="band",
-            bloom_cols=["user_id"],
-        )
+    with scratch_table(
+        spark,
+        keys=["event_id"],
+        version_cols=["ts"],
+        retention=0,
+        partition_files_by="band",
+        bloom_cols=["user_id"],
+    ) as table:
         table.merge(log, batch_id=0)
 
         def one(kind: str, pu: int) -> DataFrame:
@@ -571,8 +546,6 @@ def q_lake_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             one("absent", int(max_user) + 1)
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # -- schema evolution ------------------------------------------------------
@@ -618,8 +591,6 @@ def q_lake_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     state — no extra scan, no rewrite amplification beyond the merge
     itself; old files are never touched (NULL-fill happens at read/merge
     time, the Delta/Iceberg add-column discipline)."""
-    import shutil
-    import tempfile
     from functools import reduce
 
     from mysql_to_clickhouse_sync_spark.streaming.cdc import UPSERT as _UP
@@ -635,15 +606,12 @@ def q_lake_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "event_id", "ts", "value", "event_type")
         .withColumn(OP_COL, F.lit(_UP))
     )
-    workdir = tempfile.mkdtemp(prefix="lake_evolve_")
-    try:
-        table = LakeTable(
-            spark,
-            f"{workdir}/state",
-            keys=["user_id"],
-            version_cols=["ts", "event_id"],
-            retention=2,
-        )
+    with scratch_table(
+        spark,
+        keys=["user_id"],
+        version_cols=["ts", "event_id"],
+        retention=2,
+    ) as table:
         table.merge(narrow, batch_id=0)
         table.merge(wide, batch_id=1)
         expect("v0 schema_version", 0, table.manifest(0)["schema_version"])
@@ -667,8 +635,6 @@ def q_lake_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         out = reduce(lambda a, b: a.unionByName(b), frames)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 _CDF_ORACLE = f"""
@@ -881,15 +847,12 @@ def q_lake_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector / Hudi merge-on-read trade). The dv commit's commit_bytes
     field pins the accounting (tests/test_lakehouse.py)."""
     batches = _changelog_batches(spark, sf_dir)
-    workdir = tempfile.mkdtemp(prefix="lake_dv_")
-    try:
-        table = LakeTable(
-            spark,
-            f"{workdir}/state",
-            keys=["user_id"],
-            version_cols=["ts", "event_id"],
-            retention=4,
-        )
+    with scratch_table(
+        spark,
+        keys=["user_id"],
+        version_cols=["ts", "event_id"],
+        retention=4,
+    ) as table:
         table.merge(batches[0], batch_id=0)
         table.delete(
             batches[1].filter(F.col(OP_COL) == DELETE), batch_id=1
@@ -918,8 +881,6 @@ def q_lake_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             "version", *_COLS
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # -- deletion-vector auto-fold policy (round 9) -----------------------------
@@ -1021,15 +982,12 @@ def q_lake_dv_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = ev.agg(F.max("ts")).collect()[0][0]
     users = ev.select("user_id").distinct()
-    workdir = tempfile.mkdtemp(prefix="lake_dvfold_")
-    try:
-        table = LakeTable(
-            spark,
-            f"{workdir}/state",
-            keys=["user_id"],
-            version_cols=["ts", "event_id"],
-            retention=2,
-        )
+    with scratch_table(
+        spark,
+        keys=["user_id"],
+        version_cols=["ts", "event_id"],
+        retention=2,
+    ) as table:
         table.merge(ev.withColumn(OP_COL, F.lit(UPSERT)), batch_id=0)
         out_rows = []
         for w in (1, 2, 3):
@@ -1059,8 +1017,6 @@ def q_lake_dv_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
             "wave bigint, dv_files bigint, dv_rows bigint,"
             " base_rows bigint, folded bigint, live_rows bigint",
         )
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # -- OPTIMIZE ZORDER on an existing table (round 9) --------------------------
@@ -1171,16 +1127,13 @@ def q_lake_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     ulo, uhi = umn + (umx - umn) // 8, umn + (umx - umn) // 3
     vlo, vhi = vmn + (vmx - vmn) // 8, vmn + (vmx - vmn) // 3
     boxes = [("user_id", ulo, uhi), ("vc", vlo, vhi)]
-    workdir = tempfile.mkdtemp(prefix="lake_optz_")
-    try:
-        table = LakeTable(
-            spark,
-            f"{workdir}/state",
-            keys=["user_id"],
-            version_cols=["ts", "event_id"],
-            retention=1,
-            partition_files_by="band",
-        )
+    with scratch_table(
+        spark,
+        keys=["user_id"],
+        version_cols=["ts", "event_id"],
+        retention=1,
+        partition_files_by="band",
+    ) as table:
         table.merge(log, batch_id=0)
         _, total_b, read_b = table.read_pruned_all(boxes)
         gen = table.data_paths(table.current_version())[0]
@@ -1206,8 +1159,6 @@ def q_lake_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # -- incremental, scoped OPTIMIZE (round 10) ---------------------------------
@@ -1321,16 +1272,13 @@ def q_lake_optimize_incremental(
         ("user_id", umn + (umx - umn) // 8, umn + (umx - umn) // 3),
         ("vc", vmn + (vmx - vmn) // 8, vmn + (vmx - vmn) // 3),
     ]
-    workdir = tempfile.mkdtemp(prefix="lake_optinc_")
-    try:
-        table = LakeTable(
-            spark,
-            f"{workdir}/state",
-            keys=["user_id"],
-            version_cols=["ts", "event_id"],
-            retention=2,
-            partition_files_by="band",
-        )
+    with scratch_table(
+        spark,
+        keys=["user_id"],
+        version_cols=["ts", "event_id"],
+        retention=2,
+        partition_files_by="band",
+    ) as table:
         table.merge(log, batch_id=0)
         files_total = len(table.data_files())
         # scope 1 through THIS handle, then a fresh handle resumes: the
@@ -1340,7 +1288,7 @@ def q_lake_optimize_incremental(
         )
         resumed = LakeTable(
             spark,
-            f"{workdir}/state",
+            table.path,
             keys=["user_id"],
             version_cols=["ts", "event_id"],
             retention=2,
@@ -1372,8 +1320,6 @@ def q_lake_optimize_incremental(
             " n_scopes bigint, commits_total bigint, rows_total bigint,"
             " box_hits bigint",
         )
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 _OPT_BUCKET_ORACLE = f"""
@@ -1449,16 +1395,13 @@ def q_lake_optimize_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, ["user_id"], [F.col("ts").desc(), F.col("event_id").desc()]
     ).withColumn("vc", F.expr("CAST(floor(value * 100) AS BIGINT)"))
     zcols = ["user_id", "vc"]
-    workdir = tempfile.mkdtemp(prefix="lake_optbkt_")
-    try:
-        table = LakeTable(
-            spark,
-            f"{workdir}/state",
-            keys=["user_id"],
-            version_cols=["ts", "event_id"],
-            retention=2,
-            n_buckets=4,
-        )
+    with scratch_table(
+        spark,
+        keys=["user_id"],
+        version_cols=["ts", "event_id"],
+        retention=2,
+        n_buckets=4,
+    ) as table:
         table.merge(latest.withColumn(OP_COL, F.lit(_UP)), batch_id=0)
 
         def _markers(t: LakeTable) -> tuple[dict, dict]:
@@ -1477,7 +1420,7 @@ def q_lake_optimize_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         resumed = LakeTable(
             spark,
-            f"{workdir}/state",
+            table.path,
             keys=["user_id"],
             version_cols=["ts", "event_id"],
             retention=2,
@@ -1530,5 +1473,3 @@ def q_lake_optimize_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("revisit_ok", F.lit(revisit_ok).cast("long"))
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)

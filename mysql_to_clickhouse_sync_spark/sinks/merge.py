@@ -31,10 +31,11 @@ far smaller than the event history). For 100 TB state, partition the
 state by key-hash directory and merge only partitions the changelog
 touches (the changelog's distinct key-hash set prunes the rewrite);
 immutable generations make that incremental rewrite safe too. Manifest
-row/byte stats come from parquet FOOTERS (pyarrow metadata), never a
-data scan. Small-file pressure from frequent merges is handled by
-`compact()` (sinks/compaction.py sizing), which publishes a compacted
-generation that carries the manifest lineage forward.
+row/byte stats come from parquet FOOTERS (footers.py, read once per
+stage file per commit), never a data scan. Small-file pressure from
+frequent merges is handled by `compact()` (sinks/compaction.py
+sizing), which publishes a compacted generation that carries the
+manifest lineage forward.
 """
 
 from __future__ import annotations
@@ -42,11 +43,17 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import tempfile
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mysql_to_clickhouse_sync_spark.footers import column_stats
+from mysql_to_clickhouse_sync_spark.footers import (
+    column_stats,
+    column_stats_many,
+    partition_values,
+)
 from mysql_to_clickhouse_sync_spark.streaming.cdc import (
     apply_changelog,
     as_state,
@@ -133,14 +140,7 @@ def _footer_minmax(
     the Spark agg, so this is purely a fast path."""
     out: dict = {c: None for c in cols}
     for f, rel in pairs:
-        part: dict = {}
-        for seg in rel.split(os.sep)[:-1]:
-            if "=" in seg:
-                name, _, val = seg.partition("=")
-                try:
-                    part[name] = int(val)
-                except ValueError:
-                    pass
+        part = partition_values(rel)
         got = column_stats(f, [c for c in cols if c not in part])
         if got is None:
             return None
@@ -163,6 +163,23 @@ def _footer_minmax(
                 else [min(cur[0], lo), max(cur[1], hi)]
             )
     return out
+
+
+def _footers(files: list[str], cols: list[str] | None = None) -> dict:
+    """{file: (num_rows, {col: (lo, hi, nulls) | None})} of each file
+    (footers.column_stats_many; `cols=None` is every top-level column,
+    `[]` the row count alone). A file that is gone raises
+    FileNotFoundError — a competitor's retention sweep, which
+    _is_stale_miss classifies for the retry and conflict guards; a file
+    that exists but whose footer cannot be read raises a RuntimeError
+    naming it."""
+    got = dict(zip(files, column_stats_many(files, cols)))
+    for f, g in got.items():
+        if g is None:
+            if not os.path.exists(f):
+                raise FileNotFoundError(f)
+            raise RuntimeError(f"cannot read the parquet footer of {f}")
+    return got
 
 
 def _nullable(dt):
@@ -570,17 +587,42 @@ class LakeTable:
         multi-column clustering (z-order) exists: with files laid out
         on an interleaved key, each predicate independently eliminates
         most files, and the conjunction prunes multiplicatively."""
+
+        def keep(st_file: dict) -> bool:
+            for col, lo, hi in preds:
+                st = st_file.get(col)
+                if st is None:
+                    continue  # no stats: conservatively unprunable
+                mn, mx = st
+                if (lo is not None and mx < lo) or (
+                    hi is not None and mn > hi
+                ):
+                    return False
+            return True
+
+        # a dv-bearing version prunes against the OWNER's files (its
+        # inherited file_stats describe them — conservative: deleted
+        # rows may widen a file's [min,max])
+        return self._pruned_read("read_pruned", "file_stats", keep, version)
+
+    def _pruned_read(
+        self, name: str, stats_field: str, keep, version: int | None
+    ) -> tuple[DataFrame, int, int]:
+        """The pruned readers' one skeleton: read only the files of
+        `version` whose manifest entry under `stats_field` passes
+        `keep(entry)` (a file without an entry is conservatively read;
+        a commit without the field reads everything), then apply any
+        outstanding deletion vectors after the pruned scan — per-query
+        dv cost is O(deleted keys). Returns (live_rows_df, files_total,
+        files_read); no survivors yields an empty frame of the table's
+        schema."""
         v = self._resolve(version)
         m = self.manifest(v)
         if m.get("buckets") is not None:
             raise ValueError(
-                "read_pruned applies to unbucketed tables (bucketed state"
+                f"{name} applies to unbucketed tables (bucketed state"
                 " prunes by key-hash bucket)"
             )
-        # a dv-bearing version prunes against the OWNER's files (its
-        # inherited file_stats describe them — conservative: deleted
-        # rows may widen a file's [min,max]) and applies the vectors
-        # after the pruned scan; per-query dv cost is O(deleted keys)
         dv = self._dv_frame(v)
 
         def finish(df: DataFrame) -> DataFrame:
@@ -588,29 +630,17 @@ class LakeTable:
                 df = apply_changelog(df, dv, self.keys, self.version_cols)
             return live_rows(df)
 
-        refs, fs = self._stats_keyed_refs(v, m, "file_stats")
-        if fs is None:
-            n = len(refs)
-            return finish(self._read_refs([r for _k, r in refs])), n, n
-        keep_refs = []
-        for key, ref in refs:
-            st_file = fs.get(key)
-            ok = True
-            if st_file is not None:
-                for col, lo, hi in preds:
-                    st = st_file.get(col)
-                    if st is None:
-                        continue  # no stats: conservatively unprunable
-                    mn, mx = st
-                    if (lo is not None and mx < lo) or (
-                        hi is not None and mn > hi
-                    ):
-                        ok = False
-                        break
-            if ok:
-                keep_refs.append(ref)
+        refs, stats = self._stats_keyed_refs(v, m, stats_field)
+        all_refs = [r for _k, r in refs]
+        if stats is None:
+            return finish(self._read_refs(all_refs)), len(refs), len(refs)
+        keep_refs = [
+            ref
+            for key, ref in refs
+            if stats.get(key) is None or keep(stats[key])
+        ]
         if not keep_refs:
-            df = self._read_refs([r for _k, r in refs]).filter(F.lit(False))
+            df = self._read_refs(all_refs).filter(F.lit(False))
         else:
             df = self._read_refs(keep_refs)
         return finish(df), len(refs), len(keep_refs)
@@ -651,57 +681,36 @@ class LakeTable:
         holding `value` always sets both probe bits, so pruning never
         loses rows; false positives only cost an extra file read.
         Callers still apply the exact residual predicate."""
-        v = self._resolve(version)
-        m = self.manifest(v)
-        if m.get("buckets") is not None:
-            raise ValueError(
-                "read_bloom_pruned applies to unbucketed tables (bucketed"
-                " state prunes by key-hash bucket)"
-            )
-        dv = self._dv_frame(v)
 
-        def finish(df: DataFrame) -> DataFrame:
-            if dv is not None:
-                df = apply_changelog(df, dv, self.keys, self.version_cols)
-            return live_rows(df)
-
-        refs, fb = self._stats_keyed_refs(v, m, "file_blooms")
-        if fb is None:
-            n = len(refs)
-            return finish(self._read_refs([r for _k, r in refs])), n, n
-        keep_refs = []
-        for key, ref in refs:
-            ent = (fb.get(key) or {}).get(col)
+        def keep(blooms: dict) -> bool:
+            ent = blooms.get(col)
             if ent is None:
-                # no filter for this col/file: conservatively read
-                keep_refs.append(ref)
-                continue
+                return True  # no filter for this col/file: read it
             bits_m, bits = ent
             bset = set(bits)
-            if all(
-                _bloom_pos(value, s, bits_m) in bset
-                for s in FILE_BLOOM_SEEDS
-            ):
-                keep_refs.append(ref)
-        if not keep_refs:
-            df = self._read_refs([r for _k, r in refs]).filter(F.lit(False))
-        else:
-            df = self._read_refs(keep_refs)
-        return finish(df), len(refs), len(keep_refs)
+            return all(
+                _bloom_pos(value, s, bits_m) in bset for s in FILE_BLOOM_SEEDS
+            )
+
+        return self._pruned_read(
+            "read_bloom_pruned", "file_blooms", keep, version
+        )
 
     # -- writes (write-audit-publish) -----------------------------------
 
-    def _file_blooms(self, files: list[str], base: str) -> dict:
+    def _file_blooms(self, files: list[str], base: str, footers: dict) -> dict:
         """Per-file, per-column Bloom filters over the DISTINCT values
         of each bloom_col: m = max(64, 10 x distinct) bits, k=2 seeded
         positions per value (the engine's portable md5 idiom, so an SQL
-        oracle can re-derive every bit). Unlike _footer_stats this is a
-        data read, not metadata — but a COLUMNAR one (only bloom_cols
-        are fetched), thread-pooled across files, and paid once per
-        commit on exactly the files that commit wrote. A production
-        writer folds the hashing into the write itself (one pass) and
-        packs bits into roaring bitmaps; the sorted position list keeps
-        the filter JSON-manifest-friendly and oracle-checkable."""
+        oracle can re-derive every bit). The file's columns come from
+        its already-read footer (`footers`, see _footers); the values
+        are a data read, not metadata — but a COLUMNAR one (only
+        bloom_cols are fetched), thread-pooled across files, and paid
+        once per commit on exactly the files that commit wrote. A
+        production writer folds the hashing into the write itself (one
+        pass) and packs bits into roaring bitmaps; the sorted position
+        list keeps the filter JSON-manifest-friendly and
+        oracle-checkable."""
         from concurrent.futures import ThreadPoolExecutor
 
         import pyarrow.parquet as pq
@@ -710,8 +719,7 @@ class LakeTable:
 
         def one(f: str) -> tuple[str, dict]:
             rel = os.path.relpath(f, base)
-            schema_names = pq.read_schema(f).names
-            present = [c for c in cols if c in schema_names]
+            present = [c for c in cols if c in footers[f][1]]
             out: dict = {}
             if present:
                 t = pq.read_table(f, columns=present)
@@ -736,71 +744,21 @@ class LakeTable:
             return dict(pool.map(one, files))
 
     @staticmethod
-    def _footer_stats(files: list[str], base: str) -> dict:
-        """Per-file, per-column [min, max] — parquet FOOTER statistics
-        merged across row groups, plus exact values parsed from Hive
-        partition path segments. Metadata-only, never a data scan.
-        Numeric (int/float) columns only: string footer stats may be
-        truncated by writers, so they are not pruning-safe.
-
-        Footers are fetched with a thread pool: the per-file work is a
-        few KB of I/O, and a commit that wrote thousands of files must
-        not serialize thousands of round-trips in the driver (at 100 TB
-        the metadata pass would otherwise dominate small commits)."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        import pyarrow.parquet as pq
-
-        def one(f: str) -> tuple[str, dict]:
+    def _footer_stats(files: list[str], base: str, footers: dict) -> dict:
+        """Per-file, per-column [min, max] for the manifest, from the
+        files' already-read footers (`footers`, see _footers): the exact
+        values of the Hive partition path segments first, then every
+        column with trustworthy numeric stats (footers.column_stats) in
+        schema order — so identical commits write identical manifests."""
+        out: dict = {}
+        for f in files:
             rel = os.path.relpath(f, base)
-            stats: dict = {}
-            for seg in rel.split(os.sep)[:-1]:
-                if "=" in seg:
-                    name, _, val = seg.partition("=")
-                    try:
-                        v = int(val)
-                    except ValueError:
-                        continue
-                    stats[name] = [v, v]
-            md = pq.read_metadata(f)
-            names = [md.schema.column(i).name for i in range(md.num_columns)]
-            usable = set(names)
-            mins: dict = {}
-            maxs: dict = {}
-            for rg in range(md.num_row_groups):
-                row = md.row_group(rg)
-                for i, name in enumerate(names):
-                    if name not in usable:
-                        continue
-                    try:
-                        st = row.column(i).statistics
-                        unusable = (
-                            st is None
-                            or not st.has_min_max
-                            or isinstance(st.min, bool)
-                            or not isinstance(st.min, (int, float))
-                        )
-                    except Exception:
-                        # pyarrow raises ArrowNotImplementedError (rather
-                        # than returning None) for types it cannot extract
-                        # statistics for, e.g. decimal — not pruning-safe
-                        unusable = True
-                    if unusable:
-                        usable.discard(name)
-                        continue
-                    mins[name] = (
-                        st.min if name not in mins else min(mins[name], st.min)
-                    )
-                    maxs[name] = (
-                        st.max if name not in maxs else max(maxs[name], st.max)
-                    )
-            for name in usable:
-                if name in mins:
-                    stats[name] = [mins[name], maxs[name]]
-            return rel, stats
-
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            return dict(pool.map(one, files))
+            st = {k: [v, v] for k, v in partition_values(rel).items()}
+            for c, got in footers[f][1].items():
+                if got is not None and got[0] is not None:
+                    st[c] = [got[0], got[1]]
+            out[rel] = st
+        return out
 
     def _resolved_manifest(
         self,
@@ -811,7 +769,7 @@ class LakeTable:
         new_v: int,
         parent: int | None,
         commit_uuid: str,
-        files: list[str],
+        footers: dict,
         stage_stats: dict | None,
         stage_blooms: dict | None,
         commit_bytes: int,
@@ -824,9 +782,10 @@ class LakeTable:
         stats/blooms) are recomputed against this attempt's ownership —
         a rebase onto a new head changes both the target generation
         name and the inherited owners, so nothing here may be cached
-        across attempts except the stage's own footer stats."""
-        import pyarrow.parquet as pq
-
+        across attempts except the stage's own footers (`footers`, the
+        stage files' _footers in write order), which are read once per
+        commit."""
+        files = list(footers)
         gname = self._gen_name(new_v)
 
         def _fix_owner(o: str) -> str:
@@ -931,14 +890,10 @@ class LakeTable:
         # snapshot-scoped) — the deletion-vector accounting: a delete's
         # commit_bytes is O(deleted keys), not O(table)
         out["commit_bytes"] = commit_bytes
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            n_rows = sum(
-                pool.map(
-                    lambda f: pq.read_metadata(f).num_rows, stat_files
-                )
-            )
+        footers = {
+            **_footers([f for f in stat_files if f not in footers], []),
+            **footers,
+        }
         return {
             "version": new_v,
             "commit_uuid": commit_uuid,
@@ -947,7 +902,7 @@ class LakeTable:
             "version_cols": self.version_cols,
             "n_files": len(stat_files),
             "bytes": sum(os.path.getsize(f) for f in stat_files),
-            "rows": n_rows,
+            "rows": sum(footers[f][0] for f in stat_files),
             **out,
         }
 
@@ -1001,16 +956,19 @@ class LakeTable:
             write_fn(stage)
             sname = os.path.basename(stage)
             files = _parquet_files(stage)
-            # Stage-local footer stats are attempt-independent: compute
-            # once, splice into each attempt's resolved manifest.
+            # Stage-local footers are attempt-independent: read once,
+            # splice into each attempt's resolved manifest. Only a
+            # commit that records per-file stats needs the columns.
+            with_stats = meta.get("buckets") is None and meta.get(
+                "operation"
+            ) != "delete-vector"
+            footers = _footers(files, None if with_stats else [])
             stage_stats = None
             stage_blooms = None
-            if meta.get("buckets") is None and meta.get(
-                "operation"
-            ) != "delete-vector":
-                stage_stats = self._footer_stats(files, stage)
+            if with_stats:
+                stage_stats = self._footer_stats(files, stage, footers)
                 if self.bloom_cols:
-                    stage_blooms = self._file_blooms(files, stage)
+                    stage_blooms = self._file_blooms(files, stage, footers)
             commit_bytes = sum(os.path.getsize(f) for f in files)
             while True:
                 new_v = 0 if parent is None else parent + 1
@@ -1022,7 +980,7 @@ class LakeTable:
                     new_v=new_v,
                     parent=parent,
                     commit_uuid=commit_uuid,
-                    files=files,
+                    footers=footers,
                     stage_stats=stage_stats,
                     stage_blooms=stage_blooms,
                     commit_bytes=commit_bytes,
@@ -1514,24 +1472,16 @@ class LakeTable:
 
     @staticmethod
     def _footer_rows(paths: list[str]) -> int:
-        """Exact row count from parquet FOOTER metadata only — no data
-        I/O, thread-pooled. The dv fold decision runs after every
-        delete() commit; at 100 TB it must never cost a table scan."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        import pyarrow.parquet as pq
-
+        """Exact row count from parquet FOOTER metadata only (_footers)
+        — no data I/O. The dv fold decision runs after every delete()
+        commit; at 100 TB it must never cost a table scan."""
         files = [
             f
             for p in paths
             for f in (_parquet_files(p) if os.path.isdir(p) else [p])
         ]
-        if not files:
-            return 0
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            return sum(
-                pool.map(lambda f: pq.ParquetFile(f).metadata.num_rows, files)
-            )
+        got = _footers(files, [])
+        return sum(got[f][0] for f in files)
 
     def dv_stats(self, version: int | None = None) -> dict:
         """Deletion-vector READ-AMPLIFICATION accounting for `version`
@@ -2548,3 +2498,20 @@ def merge_into_parquet(
     return LakeTable(spark, path, keys, version_cols, retention=0).merge(
         changelog
     )
+
+
+@contextmanager
+def scratch_table(spark: SparkSession, keys: list[str], version_cols, **kw):
+    """A LakeTable (``LakeTable(spark, path, keys, version_cols, **kw)``)
+    in a fresh temp dir that is removed on exit, normal or raised — the
+    workdir lifecycle of a declared batch query that lands its rows in a
+    throwaway lake. Anything returned from inside the block must be
+    materialized there (``localCheckpoint(eager=True)`` or driver rows):
+    the table's files are gone once the block exits."""
+    workdir = tempfile.mkdtemp(prefix="lake_")
+    try:
+        yield LakeTable(
+            spark, os.path.join(workdir, "state"), keys, version_cols, **kw
+        )
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)

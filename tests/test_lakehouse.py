@@ -8,6 +8,8 @@ from __future__ import annotations
 import datetime
 import os
 
+import pytest
+
 from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable
 
 LOG_SCHEMA = "k bigint, seq bigint, ts timestamp, v double, op string"
@@ -678,6 +680,9 @@ def test_file_stats_and_pruned_read(spark, tmp_path):
         assert "band=" in rel
         assert "k" in st and "band" in st
         assert st["band"][0] == st["band"][1]
+        # deterministic bytes: partition values first, then the numeric
+        # columns in file schema order (ts and op carry no usable stats)
+        assert list(st) == ["band", "k", "seq", "v"]
     df, total, nread = t.read_pruned("k", 120, 180)
     assert total == 7 and nread == 2  # bands 2 and 3 only
     got = sorted(
@@ -690,6 +695,91 @@ def test_file_stats_and_pruned_read(spark, tmp_path):
     # a column without stats is conservatively unpruned
     _df, tot3, nread3 = t.read_pruned("nosuchcol", 0, 1)
     assert nread3 == tot3
+
+    # a two-row-group file whose second row group is all-NULL in v: the
+    # manifest keeps the non-NULL range (NULL never satisfies a range)
+    # and the pruned read still returns every matching row
+    t2 = _table(spark, tmp_path / "nullrg", retention=0)
+    k = list(range(1, 101))
+    _commit_pyarrow(
+        t2,
+        {"k": k, "seq": k, "v": [float(i) if i <= 50 else None for i in k]},
+        row_group_size=50,
+    )
+    [(rel, st)] = t2.manifest(0)["file_stats"].items()
+    assert st == {"k": [1, 100], "seq": [1, 100], "v": [1.0, 50.0]}
+    df, total, nread = t2.read_pruned("v", 10, 20)
+    assert (total, nread) == (1, 1)
+    got = sorted(r.k for r in df.filter("v BETWEEN 10 AND 20").collect())
+    assert got == list(range(10, 21))
+    assert t2.read_pruned("v", 51, None)[1:] == (1, 0)
+    assert t2.read().count() == 100
+
+
+def _commit_pyarrow(table, cols, row_group_size, payload=None):
+    """Commit one pyarrow-written file (row groups of `row_group_size`
+    rows, every row an upsert) through the table's own commit path, or
+    `payload` bytes as that file when given."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def write(stage):
+        os.makedirs(stage)
+        f = os.path.join(stage, "part-00000.parquet")
+        if payload is not None:
+            with open(f, "wb") as fh:
+                fh.write(payload)
+            return
+        n = len(next(iter(cols.values())))
+        t = pa.table({**cols, "op": ["upsert"] * n})
+        pq.write_table(t, f, row_group_size=row_group_size)
+
+    return table._commit(write, {"operation": "merge", "last_batch": None})
+
+
+def test_unreadable_stage_footer_fails_the_commit(spark, tmp_path):
+    """A stage file whose footer cannot be read fails the commit with an
+    error naming the file; nothing is published and no stage is left."""
+    t = _table(spark, tmp_path)
+    with pytest.raises(RuntimeError, match=r"part-00000\.parquet"):
+        _commit_pyarrow(t, {}, 1, payload=b"not a parquet file")
+    assert t.current_version() is None
+    assert not [n for n in os.listdir(t.path) if n.startswith("_stage-")]
+
+
+def test_swept_file_footer_read_stays_a_stale_miss(spark, tmp_path):
+    """A data file a competitor's retention sweep removed before its
+    footer is read (inherited files at publish, dv row accounting)
+    surfaces as a file miss: the retry and conflict guards classify it,
+    so a lost race re-plans instead of crashing. A file that exists but
+    cannot be read stays a RuntimeError naming it, which they do not."""
+    from mysql_to_clickhouse_sync_spark.sinks.merge import (
+        CommitConflictError,
+        _footers,
+        _is_stale_miss,
+    )
+
+    t = _table(spark, tmp_path)
+    t.merge(_log(spark, [(1, 1, 1.0, "upsert")]))
+    t.merge(_log(spark, [(2, 2, 2.0, "upsert")]))
+    swept = t.data_files(0)[0]
+    os.remove(swept)
+    for cols in (None, []):
+        with pytest.raises(FileNotFoundError) as e:
+            _footers([swept], cols)
+        assert _is_stale_miss(e.value)
+    # the table moved past the planned snapshot 0: a conflict, not a crash
+    with pytest.raises(CommitConflictError):
+        with t._conflict_on_sweep(0):
+            t._footer_rows([swept])
+
+    bad = str(tmp_path / "bad.parquet")
+    with open(bad, "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(RuntimeError, match=r"bad\.parquet") as e:
+        with t._conflict_on_sweep(0):
+            t._footer_rows([bad])
+    assert not _is_stale_miss(e.value)
 
 
 def test_lake_skipping_prunes_files_at_fixture_scale(spark):
