@@ -1094,9 +1094,7 @@ def q_lake_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     converts every later 2-d point/box query from O(files) to
     O(box-overlapping files); readers of prior versions and concurrent
     writers are untouched (same conflict rules as compact)."""
-    from mysql_to_clickhouse_sync_spark.sinks.compaction import (
-        data_file_sizes,
-    )
+    from mysql_to_clickhouse_sync_spark.sinks.merge import data_file_sizes
     from mysql_to_clickhouse_sync_spark.streaming.cdc import (
         UPSERT as _UP,
         latest_per_key,

@@ -12,8 +12,8 @@ exactly the Spark recipe the reference's architecture maps to (SURVEY.md
 
 No ClickHouse server or JDBC jar exists in the test environment, so
 everything network-bound is build-only (options dicts + writer closures,
-unit-tested for shape); `write_batch_parquet` is the locally-testable sink
-with identical batching arithmetic.
+unit-tested for shape). The batching arithmetic itself is checked against
+DuckDB by the declared query ``q_insert_batch_stats``.
 
 Scale notes: jdbc batchsize controls rows per INSERT (the reference's
 batch_size); numPartitions bounds concurrent connections (the reference's
@@ -24,7 +24,6 @@ scheduler.
 
 from __future__ import annotations
 
-import math
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame
@@ -127,8 +126,8 @@ def foreach_batch_writer(
       * for upsert-shaped tables the DDL module (sinks/ddl.py) emits
         ReplacingMergeTree(ver), where replayed rows collapse on merge
         regardless of INSERT-level dedup.
-    (streaming/matview.StateSink is the state-table analog: an applied-
-    batch log instead of a server token.)
+    (streaming/matview.StateSink is the state-table analog: a LakeTable
+    batch watermark committed with the state instead of a server token.)
 
     ``run_id`` is REQUIRED when dedup_token=True, and must be a stable id
     derived from the checkpoint location (e.g. its path hash). Both
@@ -161,22 +160,3 @@ def foreach_batch_writer(
         write_to_clickhouse(batch_df, url, table, **opts)
 
     return write
-
-
-def batch_plan(n_rows: int, batch_size: int = DEFAULT_BATCH_SIZE) -> dict[str, int]:
-    """The reference's insert batching arithmetic (checkable form — the same
-    numbers q_insert_batch_stats verifies against DuckDB)."""
-    if n_rows <= 0:
-        return {"n_rows": 0, "n_batches": 0, "last_batch_rows": 0}
-    n_batches = math.ceil(n_rows / batch_size)
-    return {
-        "n_rows": n_rows,
-        "n_batches": n_batches,
-        "last_batch_rows": n_rows - (n_batches - 1) * batch_size,
-    }
-
-
-def write_batch_parquet(df: DataFrame, path: str, n_chunks: int) -> None:
-    """The locally-testable sink twin: same partition/batch layout, parquet
-    target (what sync.py uses against the fixtures)."""
-    df.coalesce(max(1, n_chunks)).write.mode("overwrite").parquet(path)

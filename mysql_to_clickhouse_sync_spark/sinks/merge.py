@@ -20,8 +20,9 @@ never in-place mutation). The `LakeTable` class is the full contract:
     skips batch ids at or below the committed `last_batch` watermark
     (foreachBatch batch ids are monotonic), and the manifest commits
     atomically WITH the data via the pointer flip, so a crash in the
-    write window can never double-apply or half-apply a batch (the
-    streaming/matview.py StateSink discipline, generalized).
+    write window can never double-apply or half-apply a batch
+    (streaming/matview.StateSink and every other exactly-once sink
+    commit through this).
   * MERGE semantics — upsert + delete by key with a total (version_cols)
     order; deletes persist as tombstones across generations so an
     out-of-order older upsert cannot revive a deleted key.
@@ -33,9 +34,12 @@ touches (the changelog's distinct key-hash set prunes the rewrite);
 immutable generations make that incremental rewrite safe too. Manifest
 row/byte stats come from parquet FOOTERS (footers.py, read once per
 stage file per commit), never a data scan. Small-file pressure from
-frequent merges is handled by `compact()` (sinks/compaction.py
-sizing), which publishes a compacted generation that carries the
-manifest lineage forward.
+frequent merges is handled by `compact()`, which publishes a compacted
+generation that carries the manifest lineage forward. Its file count
+comes from MEASURED bytes (`plan_file_count`: stored bytes / target,
+never row counts — parquet compression makes row-based sizing wrong by
+10x+), and the rewrite is a `coalesce` (no shuffle: pure read + write)
+unless a layout change (`cluster_by`, `optimize`) is itself the goal.
 """
 
 from __future__ import annotations
@@ -49,6 +53,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mysql_to_clickhouse_sync_spark.durable import replace_file
 from mysql_to_clickhouse_sync_spark.footers import (
     column_stats,
     column_stats_many,
@@ -70,6 +75,22 @@ _UNSET = object()  # "caller did not declare the parent it computed against"
 # positive here only costs one extra file read).
 FILE_BLOOM_BITS_PER_KEY = 10
 FILE_BLOOM_SEEDS = (1, 2)
+
+TARGET_FILE_BYTES = 128 * 1024 * 1024  # compaction target, HDFS-block-ish
+
+
+def data_file_sizes(path: str) -> list[int]:
+    """Sizes of the parquet data files directly under `path`."""
+    return [
+        e.stat().st_size
+        for e in os.scandir(path)
+        if e.is_file() and e.name.endswith(".parquet")
+    ]
+
+
+def plan_file_count(total_bytes: int, target: int = TARGET_FILE_BYTES) -> int:
+    """Files a rewrite of `total_bytes` stored bytes should produce."""
+    return max(1, -(-total_bytes // target))  # ceil div
 
 
 def _bloom_pos(value, seed: int, m: int) -> int:
@@ -199,49 +220,6 @@ def _nullable(dt):
     if isinstance(dt, MapType):
         return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
     return dt
-
-
-def _current_generation(path: str) -> str | None:
-    ptr = os.path.join(path, _POINTER)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as fh:
-        gen = fh.read().strip()
-    return os.path.join(path, gen) if gen else None
-
-
-def _publish_generation(path: str, write_fn) -> str:
-    """Write-audit-publish: write the next generation via write_fn(gen_path)
-    and atomically flip the pointer. The superseded generation is KEPT on
-    disk — deleting it at publish time broke snapshot isolation for an
-    in-flight reader bound to the old generation (round-6 review finding);
-    retention pruning is the manifest-bearing LakeTable._commit's job, and
-    this helper is only the manifestless seeding/publishing primitive."""
-    old_gen = _current_generation(path)
-    gen_name = (
-        f"gen-{0 if old_gen is None else int(os.path.basename(old_gen).split('-')[1]) + 1:06d}"
-    )
-    gen_path = os.path.join(path, gen_name)
-    write_fn(gen_path)
-    tmp_ptr = os.path.join(path, _POINTER + ".tmp")
-    with open(tmp_ptr, "w") as fh:
-        fh.write(gen_name)
-    os.replace(tmp_ptr, os.path.join(path, _POINTER))  # atomic publish
-    return gen_path
-
-
-def _read_raw(spark: SparkSession, path: str) -> DataFrame | None:
-    """The stored state INCLUDING tombstone rows (op column), or None."""
-    gen = _current_generation(path)
-    if gen is None:
-        return None
-    return spark.read.parquet(gen)
-
-
-def read_state(spark: SparkSession, path: str) -> DataFrame | None:
-    """Current live rows, or None if the table doesn't exist yet."""
-    raw = _read_raw(spark, path)
-    return None if raw is None else live_rows(raw)
 
 
 class LakeTable:
@@ -388,18 +366,27 @@ class LakeTable:
         return ck if ck.get("version") == self.current_version() else None
 
     def _write_checkpoint(self, new_v: int) -> None:
-        vs = self._scan_versions()
+        manifests = self._live_manifests(self._scan_versions())
         ck = {
             "version": new_v,
-            "versions": vs,
-            "manifests": {str(v): self._scan_manifest(v) for v in vs},
+            "versions": [int(v) for v in manifests],
+            "manifests": manifests,
         }
-        tmp = os.path.join(self.path, _CHECKPOINT + ".tmp")
-        with open(tmp, "w") as fh:
-            json.dump(ck, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, os.path.join(self.path, _CHECKPOINT))
+        replace_file(os.path.join(self.path, _CHECKPOINT), json.dumps(ck))
+
+    def _live_manifests(self, versions: list[int]) -> dict[str, dict]:
+        """{str(v): manifest} for those of `versions` whose manifest is
+        still on disk. A competitor's retention prune may sweep a listed
+        version before its manifest is read: that version is no longer
+        retained, so it is left out — this runs after a publish, where
+        raising would report a committed write as failed."""
+        out = {}
+        for v in versions:
+            try:
+                out[str(v)] = self._scan_manifest(v)
+            except FileNotFoundError:
+                continue
+        return out
 
     def versions(self) -> list[int]:
         """Committed, still-retained versions (time-travel window).
@@ -420,12 +407,6 @@ class LakeTable:
             if d.startswith("gen-")
             and os.path.exists(os.path.join(self.path, d, _MANIFEST))
         }
-        # Legacy layout: a generation published pre-manifest (the
-        # _publish_generation primitive) has a valid pointer but no
-        # _MANIFEST.json — treat the pointer-named directory as an
-        # unversioned bootstrap parent instead of an empty table.
-        if cur not in found and os.path.isdir(self._gen_dir(cur)):
-            found.add(cur)
         return sorted(v for v in found if v <= cur)
 
     def manifest(self, version: int) -> dict:
@@ -435,15 +416,9 @@ class LakeTable:
         return self._scan_manifest(version)
 
     def _scan_manifest(self, version: int) -> dict:
-        p = os.path.join(self._gen_dir(version), _MANIFEST)
-        if not os.path.exists(p):
-            # legacy bootstrap generation: synthesize the minimal record
-            return {
-                "version": version,
-                "parent": None,
-                "operation": "legacy-bootstrap",
-            }
-        with open(p) as fh:
+        """The manifest of `version` as on disk; FileNotFoundError once
+        the generation is swept (a stale miss, see _is_stale_miss)."""
+        with open(os.path.join(self._gen_dir(version), _MANIFEST)) as fh:
             return json.load(fh)
 
     def history(self) -> list[dict]:
@@ -1057,12 +1032,7 @@ class LakeTable:
             raise
         # Atomic publish: data + manifest become the committed version in
         # one rename; a crash anywhere above leaves _CURRENT untouched.
-        tmp = os.path.join(self.path, _POINTER + ".tmp")
-        with open(tmp, "w") as fh:
-            fh.write(self._gen_name(new_v))
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, os.path.join(self.path, _POINTER))
+        replace_file(os.path.join(self.path, _POINTER), self._gen_name(new_v))
         # Post-publish verify: if a racing debris-clearer replaced gen-N
         # between this writer's rename and now, the manifest at gen-N
         # carries the RACER's nonce — that writer's commit is what the
@@ -1084,8 +1054,7 @@ class LakeTable:
         # (reference-counted pruning, the Iceberg expire-snapshots rule).
         retained = [v for v in self.versions() if v >= new_v - self.retention]
         referenced = {self._gen_name(v) for v in retained}
-        for v in retained:
-            mm = self.manifest(v)
+        for mm in self._live_manifests(retained).values():
             referenced.update((mm.get("buckets") or {}).values())
             if mm.get("data_owner"):
                 referenced.add(mm["data_owner"])
@@ -1120,11 +1089,10 @@ class LakeTable:
             if lb is not None and batch_id <= lb:
                 return self.read()
         payload_cols = [c for c in changelog.columns if c != "op"]
-        empty = as_state(
-            self.spark.createDataFrame(
-                [], changelog.select(*payload_cols).schema
-            )
-        )
+        # limit(0), not createDataFrame([]): the optimizer drops the empty
+        # relation from the bootstrap union, while a Python-RDD leaf starts
+        # Python workers (~2.5 s per bootstrap measured on 4 cores)
+        empty = as_state(changelog.select(*payload_cols).limit(0))
         inherited = prev_manifest.get("last_batch")
         meta = {
             "operation": "merge",
@@ -1822,8 +1790,8 @@ class LakeTable:
         target_file_bytes: int | None = None,
         cluster_by: list[str] | None = None,
     ) -> int:
-        """Publish a small-file-compacted generation (sinks/compaction.py
-        byte-based sizing) carrying the manifest lineage — logically a
+        """Publish a small-file-compacted generation (byte-based sizing,
+        `plan_file_count`) carrying the manifest lineage — logically a
         no-op commit, so the last_batch watermark is preserved and
         readers of prior versions are untouched. Returns the committed
         version (unchanged if already at or below the planned count —
@@ -1837,9 +1805,6 @@ class LakeTable:
         q_zorder_layout discipline applied to the state table. Only the
         unbucketed layout supports it (bucketed tables are already
         key-clustered by construction)."""
-        from mysql_to_clickhouse_sync_spark.sinks.compaction import (
-            TARGET_FILE_BYTES,
-        )
 
         target = target_file_bytes or TARGET_FILE_BYTES
         v = self._resolve(None)
@@ -1868,10 +1833,6 @@ class LakeTable:
         target: int,
         cluster_by: list[str] | None,
     ) -> int:
-        from mysql_to_clickhouse_sync_spark.sinks.compaction import (
-            data_file_sizes,
-            plan_file_count,
-        )
 
         meta = {
             "operation": "compact",
@@ -2055,11 +2016,6 @@ class LakeTable:
         zorder_cols: list[str],
         target_file_bytes: int | None,
     ) -> int:
-        from mysql_to_clickhouse_sync_spark.sinks.compaction import (
-            TARGET_FILE_BYTES,
-            data_file_sizes,
-            plan_file_count,
-        )
 
         with self._conflict_on_sweep(v):
             d = os.path.join(self.path, m["buckets"][b], f"bucket={b}")
@@ -2178,9 +2134,6 @@ class LakeTable:
         {scope, version, cube, files_in, bytes_in, files_out}.
         `max_scopes` bounds this call's commits (None = run until no
         unclustered files remain)."""
-        from mysql_to_clickhouse_sync_spark.sinks.compaction import (
-            TARGET_FILE_BYTES,
-        )
 
         if len(zorder_cols) != 2:
             raise ValueError("zorder re-clustering takes exactly 2 columns")
@@ -2226,10 +2179,6 @@ class LakeTable:
         chunk_bytes: int,
         scope: int,
     ) -> dict | None:
-        from mysql_to_clickhouse_sync_spark.sinks.compaction import (
-            TARGET_FILE_BYTES,
-            plan_file_count,
-        )
 
         with self._conflict_on_sweep(v):
             refs = m.get("file_refs")
@@ -2355,11 +2304,6 @@ class LakeTable:
         zorder_cols: list[str],
         target_file_bytes: int | None,
     ) -> int:
-        from mysql_to_clickhouse_sync_spark.sinks.compaction import (
-            TARGET_FILE_BYTES,
-            data_file_sizes,
-            plan_file_count,
-        )
 
         refs = m.get("file_refs")
         if refs is not None:
@@ -2408,7 +2352,7 @@ class LakeTableGroup:
     write-audit-publish, each idempotent under its own batch watermark),
     but OUTSIDE READERS RESOLVE THROUGH THE GROUP: `read(name)`
     time-travels the member to the version the committed vector names.
-    The publish is one fsync'd os.replace of the group pointer, so a
+    The publish is one atomic replace of the group pointer, so a
     crash anywhere between member commits leaves the previous vector
     fully intact — the torn window between per-table watermarks (which
     the round-9 sinks survived by convergence-on-retry) is now
@@ -2476,28 +2420,8 @@ class LakeTableGroup:
             name: t.current_version() for name, t in self.members.items()
         }
         doc = {"last_batch": batch_id, "versions": vec}
-        tmp = os.path.join(self.path, self._GPTR + ".tmp")
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, os.path.join(self.path, self._GPTR))
+        replace_file(os.path.join(self.path, self._GPTR), json.dumps(doc))
         return doc
-
-
-def merge_into_parquet(
-    spark: SparkSession,
-    path: str,
-    changelog: DataFrame,
-    keys: list[str],
-    version_cols: list[str],
-) -> DataFrame:
-    """Single-shot convenience MERGE: one LakeTable commit with
-    retention=0 (only the newest generation kept — callers that want
-    time travel or exactly-once batch tracking hold a LakeTable)."""
-    return LakeTable(spark, path, keys, version_cols, retention=0).merge(
-        changelog
-    )
 
 
 @contextmanager

@@ -20,15 +20,11 @@ Scale notes: each micro-batch shuffles only its own partial states (group
 cardinality, not row count); the read-modify-write touches the state
 table (bounded by key cardinality), never reprocessed raw history. At
 100 TB/day the state table lives in a keyed, transactional store
-(Delta/Iceberg MERGE or ClickHouse itself) — the parquet
-checkpoint-then-overwrite here is the sandbox stand-in with the same merge
-algebra.
+(Delta/Iceberg MERGE or ClickHouse itself) — the LakeTable commit here
+(sinks/merge.py) is the sandbox stand-in with the same merge algebra.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,6 +35,7 @@ from mysql_to_clickhouse_sync_spark.operators.clickhouse import (
     _cents,
 )
 from mysql_to_clickhouse_sync_spark.registry import declare
+from mysql_to_clickhouse_sync_spark.streaming.cdc import as_state
 from mysql_to_clickhouse_sync_spark.streaming.driver import FileStream
 from mysql_to_clickhouse_sync_spark.streaming.tuning import tuned
 
@@ -74,87 +71,44 @@ class StateSink:
     """Idempotent foreachBatch state sink. Structured Streaming's
     foreachBatch is at-least-once: after a failure the SAME batch_id can
     be re-delivered, and a naive merge would double-count it. The fix is
-    the standard exactly-once recipe — state and the applied-batch log
-    commit ATOMICALLY, as one artifact.
+    the standard exactly-once recipe — the state and the applied-batch
+    watermark commit ATOMICALLY, as one artifact.
 
-    Commit protocol (single-writer, like foreachBatch itself):
-      * each apply() writes a fresh generation directory
-        ``gen-<n>`` holding the merged state parquet AND a ``_APPLIED``
-        manifest (all batch ids folded into that state);
-      * the generation is published by atomically replacing the
-        ``_CURRENT`` pointer file (os.replace — atomic on POSIX).
-    A crash BEFORE the pointer flip leaves _CURRENT on the old
-    generation, whose manifest doesn't list the batch — redelivery
-    re-merges from the OLD state: no double count, no loss. A crash
-    AFTER the flip leaves the batch in the committed manifest —
-    redelivery is skipped. The live state dir is never deleted or
-    overwritten in place; stale generations are pruned only after a
-    successful flip, keeping the previous one as a crash fallback.
-    (batch_id is stable across retries by contract; at 100 TB the state
-    lives in a transactional table — Delta/Iceberg MERGE keyed on
-    batch_id — this generation scheme is the sandbox stand-in with the
-    same commit algebra.)"""
+    The state is a LakeTable (sinks/merge.py) keyed on (event_type, day)
+    whose version column ``vb`` is the batch id: each apply() merges
+    ``merge_states(live state, partial states of the batch)`` as one
+    commit carrying ``last_batch = batch_id``. A crash before the
+    table's pointer flip leaves the previous version, whose watermark
+    is below the batch — redelivery re-merges from the OLD state: no
+    double count, no loss. A crash after the flip leaves the batch at
+    the watermark — redelivery is skipped. ``retention=1`` keeps the
+    superseded version on disk as the crash fallback. (batch_id is
+    stable across retries and monotonic by the foreachBatch contract;
+    at 100 TB the state lives in a transactional table — Delta/Iceberg
+    MERGE keyed on batch_id — with the same commit algebra.)"""
 
     def __init__(self, spark: SparkSession, state_dir: str) -> None:
-        self.spark = spark
-        self.state_dir = state_dir
-        os.makedirs(state_dir, exist_ok=True)
-        self._pointer = os.path.join(state_dir, "_CURRENT")
+        from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable
 
-    def _current_gen(self) -> str | None:
-        if not os.path.exists(self._pointer):
-            return None
-        with open(self._pointer) as fh:
-            name = fh.read().strip()
-        return os.path.join(self.state_dir, name) if name else None
-
-    @staticmethod
-    def _manifest(gen_dir: str) -> set[int]:
-        path = os.path.join(gen_dir, "_APPLIED")
-        if not os.path.exists(path):
-            return set()
-        with open(path) as fh:
-            return {int(line) for line in fh if line.strip()}
+        self.table = LakeTable(
+            spark,
+            state_dir,
+            keys=["event_type", "day"],
+            version_cols=["vb"],
+            retention=1,
+        )
 
     def apply(self, batch_df: DataFrame, batch_id: int) -> None:
-        cur_gen = self._current_gen()
-        applied = self._manifest(cur_gen) if cur_gen else set()
-        if batch_id in applied:
-            return  # re-delivered batch: already committed, skip
-        partial = _partial_states(batch_df)
-        if cur_gen:
-            cur = self.spark.read.parquet(os.path.join(cur_gen, "data"))
-            merged = merge_states(cur, partial)
-        else:
-            merged = partial
-        new_gen_name = f"gen-{len(applied)}-{batch_id}"
-        new_gen = os.path.join(self.state_dir, new_gen_name)
-        # a leftover dir from a crashed earlier attempt is uncommitted
-        # garbage (the pointer never flipped to it) — clear and rewrite
-        shutil.rmtree(new_gen, ignore_errors=True)
-        merged.write.mode("overwrite").parquet(os.path.join(new_gen, "data"))
-        with open(os.path.join(new_gen, "_APPLIED"), "w") as fh:
-            for b in sorted(applied | {batch_id}):
-                fh.write(f"{b}\n")
-        # atomic publish: state + log become visible in one rename
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(new_gen_name)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._pointer)
-        # prune generations older than the committed one's predecessor
-        keep = {new_gen_name, os.path.basename(cur_gen) if cur_gen else ""}
-        for d in os.listdir(self.state_dir):
-            if d.startswith("gen-") and d not in keep:
-                shutil.rmtree(os.path.join(self.state_dir, d), ignore_errors=True)
+        states = _partial_states(batch_df)
+        if self.table.current_version() is not None:
+            states = merge_states(self.table.read().drop("vb"), states)
+        self.table.merge(
+            as_state(states.withColumn("vb", F.lit(batch_id))),
+            batch_id=batch_id,
+        )
 
     def readout(self) -> DataFrame:
-        cur_gen = self._current_gen()
-        if cur_gen is None:
-            raise FileNotFoundError(f"no committed state in {self.state_dir}")
-        states = self.spark.read.parquet(os.path.join(cur_gen, "data"))
-        return states.groupBy("event_type").agg(
+        return self.table.read().groupBy("event_type").agg(
             F.sum("c").cast("bigint").alias("n_events"),
             F.sum("s").cast("bigint").alias("sum_cents"),
             F.min("mn").alias("first_ts"),

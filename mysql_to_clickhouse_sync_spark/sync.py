@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mysql_to_clickhouse_sync_spark.catalog import ROWID, TABLES, load_table
+from mysql_to_clickhouse_sync_spark.durable import replace_file
 from mysql_to_clickhouse_sync_spark.footers import column_stats
 from mysql_to_clickhouse_sync_spark.sources.jdbc import filter_tables
 
@@ -384,8 +385,9 @@ def snapshot_sync(
     if binlog_offset is not None:
         manifest["binlog_offset"] = binlog_offset
     os.makedirs(out_dir, exist_ok=True)
-    with open(os.path.join(out_dir, "manifest.json"), "w") as fh:
-        json.dump(manifest, fh, indent=2)
+    replace_file(
+        os.path.join(out_dir, "manifest.json"), json.dumps(manifest, indent=2)
+    )
     return manifest
 
 
@@ -438,7 +440,9 @@ def incremental_sync(
     advanced bounds. Tables without new rows are skipped entirely: their
     bounds come from the source footers, so a no-op sync runs no Spark job
     (the footer fallbacks of ``table_bounds`` aside). If a table fails, the
-    manifest is left as it was.
+    manifest is left as it was; the rewrite itself is atomic
+    (``durable.replace_file``), so a crash or a serialization error
+    mid-write leaves the previous manifest byte-identical too.
     """
     manifest_path = os.path.join(out_dir, "manifest.json")
     with open(manifest_path) as fh:
@@ -455,8 +459,7 @@ def incremental_sync(
         "completed_unix": int(time.time()),
         "tables": new_entries,
     }
-    with open(manifest_path, "w") as fh:
-        json.dump(manifest, fh, indent=2)
+    replace_file(manifest_path, json.dumps(manifest, indent=2))
     return manifest
 
 

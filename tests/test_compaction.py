@@ -1,22 +1,16 @@
 """Compaction: many small files -> few target-sized files, atomically
-published, with identical content before and after."""
+published through LakeTable.compact, with identical content before and
+after."""
 
 from __future__ import annotations
-
-import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
 from mysql_to_clickhouse_sync_spark.catalog import load_table
-from mysql_to_clickhouse_sync_spark.sinks.compaction import (
-    compact_generation,
+from mysql_to_clickhouse_sync_spark.sinks.merge import (
     data_file_sizes,
     plan_file_count,
-)
-from mysql_to_clickhouse_sync_spark.sinks.merge import (
-    merge_into_parquet,
-    read_state,
+    scratch_table,
 )
 from tests.conftest import SF_DIR
 
@@ -32,38 +26,26 @@ def test_compaction_preserves_content_and_reduces_files(spark):
     events = load_table(spark, SF_DIR, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    workdir = tempfile.mkdtemp(prefix="compact_")
-    try:
-        table = f"{workdir}/state"
-        # Bootstrap the table, then publish a generation fragmented into 24
-        # tiny files (what a per-micro-batch writer leaves behind).
-        changelog = events.withColumn("op", F.lit("u"))
-        merge_into_parquet(
-            spark, table, changelog, keys=["event_id"], version_cols=["event_id"]
+    with scratch_table(spark, keys=["event_id"], version_cols=["event_id"]) as t:
+        # Bootstrap a generation fragmented into 24 tiny files (what a
+        # per-micro-batch writer leaves behind).
+        state = events.withColumn("op", F.lit("upsert"))
+        t._commit(
+            lambda p: state.repartition(24).write.parquet(p),
+            {"operation": "merge", "last_batch": None},
+            expected_parent=None,
         )
-        from mysql_to_clickhouse_sync_spark.sinks.merge import (
-            _current_generation,
-            _publish_generation,
-        )
-
-        raw = spark.read.parquet(_current_generation(table)).localCheckpoint()
-        _publish_generation(
-            table, lambda p: raw.repartition(24).write.parquet(p)
-        )
-        before = {tuple(r) for r in read_state(spark, table).collect()}
+        n_before = len(data_file_sizes(t._gen_dir(0)))
+        assert n_before == 24
+        before = {tuple(r) for r in t.read().collect()}
         # Tiny target -> deterministic small-but-fewer file count.
-        new_gen, n_before, n_after = compact_generation(
-            spark, table, target_file_bytes=512 * 1024
-        )
+        v = t.compact(target_file_bytes=512 * 1024)
+        assert v == 1
+        n_after = len(data_file_sizes(t._gen_dir(v)))
         assert n_after < n_before, (n_before, n_after)
-        sizes = data_file_sizes(new_gen)
-        assert len(sizes) == n_after
-        after = {tuple(r) for r in read_state(spark, table).collect()}
+        assert t.manifest(v)["n_files"] == n_after
+        after = {tuple(r) for r in t.read().collect()}
         assert after == before
         # Idempotent: a second compaction at the same target is a no-op.
-        _, nb2, na2 = compact_generation(
-            spark, table, target_file_bytes=512 * 1024
-        )
-        assert nb2 == na2 == n_after
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+        assert t.compact(target_file_bytes=512 * 1024) == v
+        assert t.versions()[-1] == v

@@ -52,6 +52,45 @@ def test_incremental_sync_picks_up_delta(spark, tmp_path):
     assert spark.read.parquet(entry["path"]).count() == full_rows
 
 
+def test_failed_manifest_rewrite_keeps_the_previous_manifest(
+    spark, tmp_path, monkeypatch
+):
+    """A serialization error that strikes after the manifest write has
+    begun must leave the previous manifest.json byte-identical, and the
+    next incremental_sync must resume from it (an in-place rewrite left
+    a truncated manifest that blocked every later resume)."""
+    import pytest
+
+    from mysql_to_clickhouse_sync_spark import sync
+
+    out = str(tmp_path / "inc")
+    snapshot_sync(spark, SF_DIR, out, include="^orders$")
+    mpath = f"{out}/manifest.json"
+    with open(mpath, "rb") as fh:
+        before = fh.read()
+
+    real_resume = sync._resume_table
+
+    def poisoned(*args, **kw):
+        # the entry's last field cannot be serialized: everything before
+        # it in the manifest text is already written by then
+        return {**real_resume(*args, **kw), "poison": object()}
+
+    monkeypatch.setattr(sync, "_resume_table", poisoned)
+    with pytest.raises(TypeError):
+        incremental_sync(spark, SF_DIR, out)
+    with open(mpath, "rb") as fh:
+        assert fh.read() == before
+
+    monkeypatch.undo()
+    resumed = incremental_sync(spark, SF_DIR, out)
+    assert resumed["tables"] == [
+        {**e, "last_delta_rows": 0} for e in json.loads(before)["tables"]
+    ]
+    with open(mpath) as fh:
+        assert json.load(fh) == resumed
+
+
 def _ts(minute: int) -> datetime.datetime:
     return datetime.datetime(2024, 1, 1, 0, minute)
 

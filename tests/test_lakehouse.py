@@ -534,60 +534,54 @@ def test_stale_writer_fails_before_writing(spark, tmp_path):
         )
 
 
-def test_legacy_manifestless_table_still_merges(spark, tmp_path):
-    """A state dir published by the pre-manifest _publish_generation
-    layout (pointer, no _MANIFEST.json) must read and MERGE as a
-    bootstrap parent instead of raising (round-6 ADVICE)."""
-    from mysql_to_clickhouse_sync_spark.sinks.merge import (
-        _publish_generation,
-    )
-    from mysql_to_clickhouse_sync_spark.streaming.cdc import as_state
-
-    path = str(tmp_path / "state")
-    os.makedirs(path)
-    seed = as_state(
-        _log(spark, [(1, 1, 1.0, "upsert")]).drop("op")
-    )
-    _publish_generation(path, lambda p: seed.write.parquet(p))
-    t = LakeTable(spark, path, keys=["k"], version_cols=["ts", "seq"])
-    assert t.versions() == [0]
-    assert _state(t) == {1: 1.0}
-    out = t.merge(_log(spark, [(2, 2, 2.0, "upsert")]))
-    assert {r.k: r.v for r in out.collect()} == {1: 1.0, 2: 2.0}
-    assert t.current_version() == 1
-
-
-def test_reader_survives_concurrent_compact_generation(spark, tmp_path):
-    """compact_generation used to delete the superseded generation at
-    publish; an in-flight reader bound to it lost its files mid-read.
-    Now it follows the retention discipline: the old generation stays."""
-    from mysql_to_clickhouse_sync_spark.sinks.compaction import (
-        compact_generation,
-    )
-    from mysql_to_clickhouse_sync_spark.sinks.merge import (
-        _current_generation,
-    )
-
-    from mysql_to_clickhouse_sync_spark.sinks.merge import (
-        _publish_generation,
-    )
-
-    path = str(tmp_path / "state")
-    os.makedirs(path)
-    big = spark.createDataFrame(
-        [(k, k, _ts(k % 60), float(k), "upsert") for k in range(1, 201)],
-        LOG_SCHEMA,
+def test_reader_survives_concurrent_compact(spark, tmp_path):
+    """A reader bound to the version before a compaction keeps its files:
+    the superseded generation follows the retention discipline instead of
+    being deleted at publish."""
+    t = _table(spark, tmp_path, retention=1)
+    big = _log(
+        spark, [(k, k % 60, float(k), "upsert") for k in range(1, 201)]
     ).repartition(8)
-    _publish_generation(path, lambda p: big.write.parquet(p))
-    old_gen = _current_generation(path)
-    reader = spark.read.parquet(old_gen)  # binds to the old generation
-    new_gen, n_before, n_after = compact_generation(
-        spark, path, target_file_bytes=1 << 30
+    t._commit(
+        lambda p: big.write.parquet(p),
+        {"operation": "merge", "last_batch": None},
+        expected_parent=None,
     )
-    assert n_after < n_before
+    old_gen = t.data_paths()[0]
+    n_before = len(t.data_files())
+    reader = t.read()  # binds to the pre-compaction generation
+    new_v = t.compact(target_file_bytes=1 << 30)
+    assert new_v == 1
+    assert len(t.data_files()) < n_before
     # the pre-compaction snapshot is still fully readable
     assert reader.count() == 200
     assert os.path.isdir(old_gen)
+
+
+def test_checkpoint_leaves_out_a_swept_version(spark, tmp_path, monkeypatch):
+    """A version the directory walk lists but a competitor's retention
+    prune sweeps before its manifest is read is no longer retained: the
+    commit still succeeds, and its checkpoint neither lists the version
+    nor invents a manifest for it."""
+    import json
+
+    from mysql_to_clickhouse_sync_spark.sinks.merge import _CHECKPOINT
+
+    t = _table(spark, tmp_path, retention=0)
+    t.merge(_log(spark, [(1, 1, 1.0, "upsert")]), batch_id=0)
+    t.merge(_log(spark, [(2, 2, 2.0, "upsert")]), batch_id=1)
+    assert not os.path.exists(t._gen_dir(0))  # swept by retention
+    real_scan = LakeTable._scan_versions
+    monkeypatch.setattr(
+        LakeTable, "_scan_versions", lambda self: [0] + real_scan(self)
+    )
+    assert t.merge(_log(spark, [(3, 3, 3.0, "upsert")]), batch_id=2).count() == 3
+    with open(os.path.join(t.path, _CHECKPOINT)) as fh:
+        ck = json.load(fh)
+    assert ck["version"] == 2
+    assert ck["versions"] == [2]
+    assert set(ck["manifests"]) == {"2"}
+    assert t.versions() == [2]
 
 
 def test_schema_evolution_merge_nullfills_and_emits_ddl(spark, tmp_path):

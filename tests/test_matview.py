@@ -142,12 +142,47 @@ def test_batch_slicing_invisible_in_state(spark, tmp_path):
     assert _readout_rows(sink_a) == _readout_rows(sink_b)
 
 
-def test_torn_generation_without_manifest_is_garbage(spark, tmp_path):
-    """Crash window A (VERDICT r3 #4): die AFTER the state parquet lands
-    but BEFORE the _APPLIED manifest is written. The torn generation must
-    be invisible to readers (pointer still old), and redelivery must
-    overwrite the garbage dir and converge exactly once."""
+def _unpublished_generation(sink, batch, batch_id, manifest):
+    """Write the generation apply(batch, batch_id) would publish into the
+    state table's next gen-N directory WITHOUT flipping its pointer — the
+    aftermath of a crash inside the commit. With `manifest`, gen-N also
+    holds a complete commit record claiming the batch."""
+    import json
     import os
+
+    from mysql_to_clickhouse_sync_spark.sinks.merge import _MANIFEST
+    from mysql_to_clickhouse_sync_spark.streaming.cdc import as_state
+    from mysql_to_clickhouse_sync_spark.streaming.matview import (
+        _partial_states,
+        merge_states,
+    )
+
+    t = sink.table
+    cur = t.current_version()
+    merged = merge_states(t.read().drop("vb"), _partial_states(batch))
+    gen = t._gen_dir(cur + 1)
+    as_state(merged.withColumn("vb", F.lit(batch_id))).write.parquet(gen)
+    if manifest:
+        record = {
+            **t.manifest(cur),
+            "version": cur + 1,
+            "parent": cur,
+            "last_batch": batch_id,
+        }
+        with open(os.path.join(gen, _MANIFEST), "w") as fh:
+            json.dump(record, fh)
+    return gen
+
+
+def test_torn_generation_without_manifest_is_garbage(spark, tmp_path):
+    """Crash window A: die AFTER the merged state parquet
+    lands in the next generation directory but BEFORE its manifest is
+    written. The torn generation must be invisible to readers (pointer
+    still old), and redelivery must clear the garbage dir and converge
+    exactly once."""
+    import os
+
+    from mysql_to_clickhouse_sync_spark.sinks.merge import _MANIFEST
 
     events = _events(spark)
     half1 = events.filter(F.col("event_id") % 2 == 0)
@@ -157,21 +192,13 @@ def test_torn_generation_without_manifest_is_garbage(spark, tmp_path):
     sink.apply(half1, 0)
     after_b0 = _readout_rows(sink)
 
-    # construct the exact aftermath: data written, no manifest, no flip
-    from mysql_to_clickhouse_sync_spark.streaming.matview import (
-        _partial_states,
-        merge_states,
-    )
-
-    cur = spark.read.parquet(os.path.join(state, "gen-0-0", "data"))
-    merged = merge_states(cur, _partial_states(half2))
-    torn = os.path.join(state, "gen-1-1")
-    merged.write.mode("overwrite").parquet(os.path.join(torn, "data"))
-    assert not os.path.exists(os.path.join(torn, "_APPLIED"))
+    torn = _unpublished_generation(sink, half2, 1, manifest=False)
+    assert not os.path.exists(os.path.join(torn, _MANIFEST))
 
     # reader: still the committed batch-0 state, torn gen invisible
     sink_r = StateSink(spark, state)
     assert _readout_rows(sink_r) == after_b0
+    assert sink_r.table.versions() == [0]
     # redelivery overwrites the garbage and commits exactly once
     sink_r.apply(half2, 1)
     clean = StateSink(spark, str(tmp_path / "clean"))
@@ -182,34 +209,21 @@ def test_torn_generation_without_manifest_is_garbage(spark, tmp_path):
 
 def test_complete_unpublished_generation_is_not_believed(spark, tmp_path):
     """Crash window B: die AFTER the new generation is complete (data AND
-    manifest listing the batch) but BEFORE the pointer flip. The manifest
-    in the unpublished generation MUST NOT make redelivery skip the batch
-    — only the pointed-to generation's manifest counts; a sink that
-    globbed manifests would drop the batch here (loss, the dual of the
-    double-count)."""
-    import os
-
+    a manifest claiming the batch) but BEFORE the pointer flip. That
+    manifest MUST NOT make redelivery skip the batch — only the
+    pointed-to version's watermark counts; a sink that globbed manifests
+    would drop the batch here (loss, the dual of the double-count)."""
     events = _events(spark)
     half1 = events.filter(F.col("event_id") % 2 == 0)
     half2 = events.filter(F.col("event_id") % 2 == 1)
     state = str(tmp_path / "state")
     sink = StateSink(spark, state)
     sink.apply(half1, 0)
-
-    from mysql_to_clickhouse_sync_spark.streaming.matview import (
-        _partial_states,
-        merge_states,
-    )
-
-    cur = spark.read.parquet(os.path.join(state, "gen-0-0", "data"))
-    merged = merge_states(cur, _partial_states(half2))
-    unpub = os.path.join(state, "gen-1-1")
-    merged.write.mode("overwrite").parquet(os.path.join(unpub, "data"))
-    with open(os.path.join(unpub, "_APPLIED"), "w") as fh:
-        fh.write("0\n1\n")
+    _unpublished_generation(sink, half2, 1, manifest=True)
     # pointer untouched: batch 1 is NOT committed
 
     sink_r = StateSink(spark, state)
+    assert sink_r.table.last_batch() == 0
     sink_r.apply(half2, 1)  # must merge (from the OLD state), not skip
     clean = StateSink(spark, str(tmp_path / "clean"))
     clean.apply(half1, 0)

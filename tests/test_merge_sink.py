@@ -9,10 +9,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from mysql_to_clickhouse_sync_spark.sinks.merge import (
-    merge_into_parquet,
-    read_state,
-)
+from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable
 
 
 def _ts(minute: int) -> datetime.datetime:
@@ -22,49 +19,41 @@ def _ts(minute: int) -> datetime.datetime:
 LOG_SCHEMA = "k bigint, seq bigint, ts timestamp, v double, op string"
 
 
+def _table(spark, path):
+    return LakeTable(spark, path, ["k"], ["ts", "seq"], retention=0)
+
+
 def test_merge_bootstrap_and_update(spark, tmp_path):
     path = str(tmp_path / "state")
     b1 = spark.createDataFrame(
         [(1, 1, _ts(1), 1.0, "upsert"), (2, 2, _ts(2), 2.0, "upsert")],
         LOG_SCHEMA,
     )
-    out1 = merge_into_parquet(spark, path, b1, ["k"], ["ts", "seq"])
+    out1 = _table(spark, path).merge(b1)
     assert {r.k: r.v for r in out1.collect()} == {1: 1.0, 2: 2.0}
 
     b2 = spark.createDataFrame(
         [(1, 3, _ts(5), 9.0, "upsert"), (2, 4, _ts(6), 0.0, "delete")],
         LOG_SCHEMA,
     )
-    out2 = merge_into_parquet(spark, path, b2, ["k"], ["ts", "seq"])
+    out2 = _table(spark, path).merge(b2)
     assert {r.k: r.v for r in out2.collect()} == {1: 9.0}
     # Reader view agrees with the merge's return value.
-    assert {r.k: r.v for r in read_state(spark, path).collect()} == {1: 9.0}
+    assert {r.k: r.v for r in _table(spark, path).read().collect()} == {1: 9.0}
 
 
 def test_tombstone_survives_generations(spark, tmp_path):
     path = str(tmp_path / "state")
-    merge_into_parquet(
-        spark,
-        path,
-        spark.createDataFrame([(1, 1, _ts(1), 1.0, "upsert")], LOG_SCHEMA),
-        ["k"],
-        ["ts", "seq"],
+    _table(spark, path).merge(
+        spark.createDataFrame([(1, 1, _ts(1), 1.0, "upsert")], LOG_SCHEMA)
     )
-    merge_into_parquet(
-        spark,
-        path,
-        spark.createDataFrame([(1, 2, _ts(8), 0.0, "delete")], LOG_SCHEMA),
-        ["k"],
-        ["ts", "seq"],
+    _table(spark, path).merge(
+        spark.createDataFrame([(1, 2, _ts(8), 0.0, "delete")], LOG_SCHEMA)
     )
     # A LATER merge carrying an OLDER upsert must not revive the key —
     # the tombstone persisted across generations.
-    out = merge_into_parquet(
-        spark,
-        path,
-        spark.createDataFrame([(1, 3, _ts(4), 5.0, "upsert")], LOG_SCHEMA),
-        ["k"],
-        ["ts", "seq"],
+    out = _table(spark, path).merge(
+        spark.createDataFrame([(1, 3, _ts(4), 5.0, "upsert")], LOG_SCHEMA)
     )
     assert out.count() == 0
 
@@ -72,14 +61,10 @@ def test_tombstone_survives_generations(spark, tmp_path):
 def test_single_generation_retained(spark, tmp_path):
     path = str(tmp_path / "state")
     for seq in range(3):
-        merge_into_parquet(
-            spark,
-            path,
+        _table(spark, path).merge(
             spark.createDataFrame(
                 [(1, seq, _ts(seq), float(seq), "upsert")], LOG_SCHEMA
-            ),
-            ["k"],
-            ["ts", "seq"],
+            )
         )
     gens = [d for d in os.listdir(path) if d.startswith("gen-")]
     assert len(gens) == 1  # old generations retired

@@ -109,23 +109,6 @@ def test_frame_sample_real_avi_frames(spark):
     real.unpersist()
 
 
-def test_batch_plan_arithmetic():
-    from mysql_to_clickhouse_sync_spark.sinks.clickhouse import batch_plan
-
-    assert batch_plan(0) == {"n_rows": 0, "n_batches": 0, "last_batch_rows": 0}
-    assert batch_plan(1) == {"n_rows": 1, "n_batches": 1, "last_batch_rows": 1}
-    assert batch_plan(1000) == {
-        "n_rows": 1000,
-        "n_batches": 1,
-        "last_batch_rows": 1000,
-    }
-    assert batch_plan(1001) == {
-        "n_rows": 1001,
-        "n_batches": 2,
-        "last_batch_rows": 1,
-    }
-
-
 def test_clickhouse_options_shape():
     from mysql_to_clickhouse_sync_spark.sinks.clickhouse import (
         clickhouse_jdbc_options,

@@ -175,8 +175,6 @@ def test_n_writers_plus_compactor_serialize(spark, tmp_path):
     # own buckets/refs — so adjacency in versions() is NOT the pin.
     for v in t.versions():
         m = t.manifest(v)
-        if m.get("operation") == "legacy-bootstrap":
-            continue
         assert m.get("parent") == (None if v == 0 else v - 1), (
             v,
             m.get("parent"),
