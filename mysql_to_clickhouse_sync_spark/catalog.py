@@ -3,15 +3,19 @@
 The reference discovers tables with ``SHOW TABLES`` and reads them over the
 MySQL wire protocol (mysql_to_clickhouse_sync.py:155, :41). Here the catalog
 is a directory of parquet files — one per table — which Spark reads with full
-predicate pushdown / column pruning. Declared schemas come free from the
-parquet footers (the reference had none: it inferred per-batch from dict keys,
-mysql_to_clickhouse_sync.py:56).
+predicate pushdown / column pruning. Schemas come free from the parquet
+footers, as the reference's come from MySQL's catalog (S:41-56):
+``read_parquet`` hands Spark the footer schema (``footers.arrow_schema``),
+so loading a table runs no schema-inference job; it falls back to Spark's
+inference only where the footers cannot stand in for it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from mysql_to_clickhouse_sync_spark.footers import arrow_schema
 
 TABLES = (
     "region",
@@ -43,10 +47,11 @@ ROWID = {
 }
 
 
-# events.ts is parquet TIMESTAMP(NANOS). pyspark >= 4.1 reads it natively as
-# timestamp_ntz floored to microseconds; older 4.x needs the legacy
-# nanosAsLong conf + an explicit micros conversion (kept below as a
-# fallback — it's a no-op when the native read already yields a timestamp).
+# events.ts may be parquet TIMESTAMP(NANOS) (the fixtures store MICROS).
+# Spark rejects NANOS unless the legacy nanosAsLong conf reads it as bigint,
+# converted to microseconds below (a no-op when the read already yields a
+# timestamp). footers.arrow_schema refuses nanosecond columns, so such a
+# file always takes Spark's own inference under that conf.
 # Every DuckDB oracle that touches ts mirrors the µs floor with
 # make_timestamp(epoch_us(ts)) so both engines see the identical value
 # (see EVENTS_US_CTE in the operator modules).
@@ -62,7 +67,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ts_col = _NANOS_TS_TABLES.get(name)
     if ts_col is not None:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if ts_col is not None and dict(df.dtypes).get(ts_col) == "bigint":
         df = df.withColumn(ts_col, F.timestamp_micros(F.expr(f"{ts_col} div 1000")))
     # pyspark >= 4.1 reads the fixtures' naive parquet timestamps as
@@ -77,6 +82,41 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if dtype == "timestamp_ntz":
             df = df.withColumn(col_name, F.col(col_name).cast("timestamp"))
     return df
+
+
+# The session confs that steer Spark's parquet type mapping, at the
+# defaults ``read_parquet``'s footer conversion mirrors; a session that
+# changes one gets Spark's own inference.
+_READER_CONFS = {
+    "spark.sql.parquet.binaryAsString": "false",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
+}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema taken from the parquet
+    footers instead of a one-task inference job. The footer schema is
+    converted the way Spark's parquet reader maps it (naive timestamps to
+    TIMESTAMP_NTZ) and made all-nullable, as Spark reports every file
+    source column. Where ``footers.arrow_schema`` cannot answer, the
+    conversion fails, or the session changed a ``_READER_CONFS`` default,
+    Spark infers as before, so a corrupt source still fails inside Spark
+    and never reads as empty."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from mysql_to_clickhouse_sync_spark.sinks.merge import _nullable
+
+    schema = None
+    if all(spark.conf.get(k, v).lower() == v for k, v in _READER_CONFS.items()):
+        schema = arrow_schema(path)
+    if schema is not None:
+        try:
+            schema = _nullable(from_arrow_schema(schema, prefer_timestamp_ntz=True))
+        except (TypeError, ValueError):  # PySpark's unsupported-type errors
+            schema = None
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 # Prefix for any DuckDB oracle whose result or ordering depends on events.ts:

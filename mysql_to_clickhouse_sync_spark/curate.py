@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mysql_to_clickhouse_sync_spark.catalog import load_table
+from mysql_to_clickhouse_sync_spark.durable import replace_file
 from mysql_to_clickhouse_sync_spark.operators.curation import curate as _flags
 from mysql_to_clickhouse_sync_spark.operators.dedup import passage_report
 from mysql_to_clickhouse_sync_spark.operators.profiling import split_assign
@@ -165,8 +166,10 @@ def run(
         "elapsed_sec": round(time.time() - t0, 2),
     }
     os.makedirs(out, exist_ok=True)
-    with open(os.path.join(out, "manifest.json"), "w") as fh:
-        json.dump(manifest, fh, indent=2, default=str)
+    replace_file(
+        os.path.join(out, "manifest.json"),
+        json.dumps(manifest, indent=2, default=str),
+    )
     return manifest
 
 

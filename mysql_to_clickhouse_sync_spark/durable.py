@@ -6,7 +6,8 @@ must see whole-old or whole-new, never torn:
 * a LakeTable's ``_CURRENT`` generation pointer and its
   ``_CHECKPOINT.json`` commit-log checkpoint (sinks/merge.py);
 * a LakeTableGroup's ``_GROUP_CURRENT`` member-version vector;
-* the sync resume manifest ``manifest.json`` (sync.py).
+* the sync resume manifest ``manifest.json`` (sync.py) and the curation
+  run's ``manifest.json`` (curate.py).
 
 ``replace_file`` writes the text to ``<path>.tmp``, flushes and fsyncs it,
 then renames it over ``path`` (``os.replace``, atomic on POSIX). A crash or

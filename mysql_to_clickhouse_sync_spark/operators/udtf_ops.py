@@ -76,12 +76,13 @@ def q_udtf_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") < UDTF_DOC_BOUND
     )
     spark.udtf.register("chunk_words", ChunkWords)
-    docs.select("doc_id", "text").createOrReplaceTempView("udtf_docs_in")
+    # A DataFrame argument: spark.sql drops the view it binds on return.
     return spark.sql(
         """
         SELECT d.doc_id, c.chunk_idx, c.chunk, c.n_words
-        FROM udtf_docs_in d, LATERAL chunk_words(d.text) c
-        """
+        FROM {docs} d, LATERAL chunk_words(d.text) c
+        """,
+        docs=docs.select("doc_id", "text"),
     )
 
 

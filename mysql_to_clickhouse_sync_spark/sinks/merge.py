@@ -301,7 +301,11 @@ class LakeTable:
         # read.parquet costs a footer-read job apiece (~0.1 s driver
         # time each, dozens of reads per maintenance query). Keyed by
         # (basePath, sorted paths); dies with the handle, so a fresh
-        # handle still proves everything from disk alone.
+        # handle still proves everything from disk alone. Source tables
+        # skip that job another way: catalog.read_parquet takes their
+        # schema from the footers (footers.arrow_schema), which refuses
+        # the partitioned layouts a generation can have, so generation
+        # reads keep this memo.
         self._schema_memo: dict = {}
         os.makedirs(path, exist_ok=True)
 

@@ -33,12 +33,15 @@ Tables sync concurrently, as in the reference's table-level pool
 (``max_workers``, default 10; S:192-199, S:237): a driver-side thread pool
 of min(max_workers, #tables) threads dispatches one table each on the one
 shared session, so each table's driver-side planning and scheduling
-(schema inference, range sample, shuffle, write) overlaps the other
+(range sample, shuffle, write) overlaps the other
 tables' jobs. The sync is driver-bound, not executor-bound: on a 10-table
 sf0.001 source on 4 cores, a sequential snapshot spent 1.9 s of 3.7 s with
 only the driver busy; ten workers brought it to 1.7 s. ``max_workers=1``
 runs the same pool one table at a time. Each table's jobs keep the
-caller's job group and local properties.
+caller's job group and local properties. No table read infers its schema
+with a Spark job: ``catalog.read_parquet`` takes it from the parquet
+footers, as MySQL's catalog hands the reference its column types
+(S:41-56).
 
 Error policy deliberately diverges from the reference: it logs-and-continues,
 returning [] on failed reads (S:48-50 — silent data loss). Here a failed
@@ -62,41 +65,19 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mysql_to_clickhouse_sync_spark.catalog import ROWID, TABLES, load_table
+from mysql_to_clickhouse_sync_spark.catalog import (
+    ROWID,
+    TABLES,
+    load_table,
+    read_parquet,
+)
 from mysql_to_clickhouse_sync_spark.durable import replace_file
-from mysql_to_clickhouse_sync_spark.footers import column_stats
+from mysql_to_clickhouse_sync_spark.footers import column_stats, data_files
 from mysql_to_clickhouse_sync_spark.sources.jdbc import filter_tables
 
 DEFAULT_BATCH_SIZE = 1000  # reference --batch_size default (S:236)
 DEFAULT_MAX_WORKERS = 10  # reference --max_workers default (S:237)
 MAX_OUTPUT_PARTITIONS = 64
-
-
-def _hidden(name: str) -> bool:
-    """Names Spark's file listing skips: ``_SUCCESS``, ``.crc`` sidecars,
-    in-flight ``._COPYING_`` copies (``_k=v`` is a partition, not hidden)."""
-    return (
-        name.startswith(".")
-        or (name.startswith("_") and "=" not in name)
-        or name.endswith("._COPYING_")
-    )
-
-
-def _data_files(path: str) -> list[str] | None:
-    """The files ``spark.read.parquet(path)`` reads: the file itself, or a
-    directory's files minus hidden names. None (not a plain listing) for a
-    missing or empty path and for a directory with a subdirectory
-    (partitions or nested output), which only Spark's file index reads
-    faithfully."""
-    if os.path.isfile(path):
-        return [path]
-    try:
-        entries = [e for e in os.scandir(path) if not _hidden(e.name)]
-    except OSError:
-        return None
-    if not entries or not all(e.is_file() for e in entries):
-        return None
-    return [e.path for e in entries]
 
 
 def footer_bounds(
@@ -111,12 +92,13 @@ def footer_bounds(
     min is > ``above`` contributes its rows minus its NULL keys, a file
     whose max is <= ``above`` (or whose keys are all NULL) contributes
     nothing. None — fall back to the Spark aggregate — when the file set
-    is not a plain listing (``_data_files``), a footer cannot be read, a
-    file lacks integer min/max stats for ``rowid``, or, with ``above``, a
-    file straddles ``above`` or lacks its null count. An unreadable
-    source thus still fails in Spark as before; it never reads as 0 rows.
-    ``rowid=None`` (a PK-less table) counts rows only: (0, 0, count)."""
-    files = _data_files(path)
+    is not a plain listing (``footers.data_files``), a footer cannot be
+    read, a file lacks integer min/max stats for ``rowid``, or, with
+    ``above``, a file straddles ``above`` or lacks its null count. An
+    unreadable source thus still fails in Spark as before; it never reads
+    as 0 rows. ``rowid=None`` (a PK-less table) counts rows only:
+    (0, 0, count)."""
+    files = data_files(path)
     if files is None:
         return None
     mn = mx = None
@@ -188,10 +170,11 @@ def _source_path(sf_dir: str, name: str) -> str:
 def _load_any(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Catalog tables go through load_table (NTZ normalization etc.);
     discovered tables outside the static catalog read directly — the
-    analog of a SHOW TABLES hit the metadata query knows nothing about."""
+    analog of a SHOW TABLES hit the metadata query knows nothing about.
+    Either way the schema comes from the footers (``read_parquet``)."""
     if name in TABLES:
         return load_table(spark, sf_dir, name)
-    return spark.read.parquet(_source_path(sf_dir, name))
+    return read_parquet(spark, _source_path(sf_dir, name))
 
 
 def _per_table(

@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import json
 import os
+from types import SimpleNamespace
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -90,3 +93,24 @@ def test_passage_gate_drops_boilerplate_and_reports_mixture(spark, tmp_path):
     shares = [int(m["share_bp"]) for m in gated["mixture"]]
     assert 0 < sum(shares) <= 10000
     assert len(gated["mixture"]) > 0
+
+
+def test_failed_manifest_write_keeps_the_previous_manifest(
+    spark, tmp_path, monkeypatch
+):
+    """The manifest is published atomically (durable.replace_file): a
+    serialization error leaves the previous manifest byte-identical and
+    no temporary file behind."""
+    out = tmp_path / "curated"
+    out.mkdir()
+    previous = b'{"n_kept": 1}\n'
+    (out / "manifest.json").write_bytes(previous)
+
+    def boom(*a, **kw):
+        raise TypeError("cannot serialize")
+
+    monkeypatch.setattr(curate, "json", SimpleNamespace(dumps=boom))
+    with pytest.raises(TypeError, match="cannot serialize"):
+        curate.run(spark, SF_DIR, str(out))
+    assert (out / "manifest.json").read_bytes() == previous
+    assert sorted(os.listdir(out)) == ["corpus", "manifest.json"]

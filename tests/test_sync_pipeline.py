@@ -450,3 +450,15 @@ def test_resume_runs_jobs_only_for_tables_that_grew(spark, tmp_path, monkeypatch
     assert alone["tables"][0]["last_delta_rows"] == 10
     assert jobs_all == jobs_alone
     assert spark.read.parquet(f"{out}/orders").count() == 1520
+
+
+def test_snapshot_runs_no_schema_inference_job(spark, tmp_path):
+    """Every source schema comes from the footers (catalog.read_parquet):
+    a 10-table snapshot runs its tables' range samples and writes only,
+    at most 14 jobs where inference added one job per table."""
+    out = str(tmp_path / "out")
+    m, jobs = _group_jobs(
+        spark, "snapshot-ten", lambda: snapshot_sync(spark, SF_DIR, out)
+    )
+    assert len(m["tables"]) == 10
+    assert jobs <= 14, jobs
